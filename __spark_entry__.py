@@ -65,11 +65,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # Keys whose physical plan shape changed in the CURRENT session (exempt
 # from the staleness ordering check in tools/rotation_check.py): the
-# fused star-CC rounds ($SSLR_CC_ROUND), the gate materialization
-# default ($SSLR_GATE_HIST=scored), and the simhash parallelism-floor
-# default ($SSLR_SIMHASH_FLOOR=off).  All verified output-identical
-# locally — full oracle green twice this round (sf0.01 + sf0.001) plus
-# per-knob equality tests in tests/test_round12_fixes.py.
+# adjacency-array star-CC rounds, the persisted gate scores, and the
+# simhash plan without a parallelism floor.  All verified
+# output-identical locally — full oracle green at sf0.01 and sf0.001,
+# plus the star-CC-vs-dup_clusters equality tests in
+# tests/test_round12_fixes.py.
 CHANGED_KEYS: list[str] = [
     "x_curation_pipeline",
     "x_curation_pipeline_neardup",

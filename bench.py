@@ -773,8 +773,8 @@ def main(only: set[str] | None = None) -> dict:
     run(
         "ccnet_buckets",
         lambda: q_text_ccnet_buckets(spark, SF_DIR).count(),
-        # lm_perplexity_buckets shares _gate_frames — release the
-        # 'scored' persist between reps (cold-rep contract)
+        # lm_perplexity_buckets persists its gate scores — release
+        # them between reps (cold-rep contract)
         reset=DD.release_caches,
     )
 

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sslr_spark.config import ConfigError
-from sslr_spark.functions.dedup import exact_dedup_groups
+from sslr_spark.functions.dedup import exact_dedup_groups, take_gate_cache
 from sslr_spark.functions.quality_model import quality_quantile_gate
 from sslr_spark.functions.sampling import shard_assign, source_cap
 from sslr_spark.functions.text import gopher_flags
@@ -216,21 +216,28 @@ class CurationResult:
 
     When the near-dup stage ran, ``df`` reads through a persisted
     intermediate (the gopher+exact survivor frame, referenced by 4+
-    subtrees of the plan). In a long-lived driver call
-    :meth:`release` after the final action on ``df`` — otherwise the
-    cached blocks live for the application lifetime. Actions after
+    subtrees of the plan); every gate stage reads through its own
+    persisted scores. In a long-lived driver call :meth:`release`
+    after the final action on ``df`` — otherwise the cached blocks
+    live until the next release_caches(). Actions after
     ``release()`` simply recompute from source."""
 
     df: DataFrame
     funnel: dict[str, int] = field(default_factory=dict)
     _cached: DataFrame | None = None
+    _gate_cached: list[DataFrame] = field(default_factory=list)
 
     def release(self) -> None:
-        """Unpersist the near-dup stage's survivor cache (no-op when
-        the stage didn't run or was already released)."""
+        """Unpersist the near-dup survivor cache and the gate score
+        caches (no-op for stages that didn't run or were already
+        released)."""
+        from sslr_spark.functions.dedup import release_frames
+
         if self._cached is not None:
             self._cached.unpersist()
             self._cached = None
+        release_frames(self._gate_cached)
+        self._gate_cached = []
 
 
 def curate_documents(
@@ -273,6 +280,10 @@ def curate_documents(
             f"keep_fraction must be in (0, 1], got {keep_fraction}"
         )
     funnel: dict[str, int] = {}
+    # each gate persists its scores and would release the previous
+    # gate's on entry; the chained gates share one lazy plan, so the
+    # pipeline owns their caches instead (CurationResult.release)
+    gate_cached: list[DataFrame] = []
 
     def tick(name: str, frame: DataFrame) -> None:
         if with_funnel:
@@ -394,6 +405,7 @@ def curate_documents(
             weights=quality_weights,
             bias=quality_bias,
         ).select(kc)
+        gate_cached.append(take_gate_cache())
         cur = cur.join(kept, kc, "left_semi")
         tick("quality_gate", cur)
 
@@ -408,6 +420,7 @@ def curate_documents(
             cur, lm_keep_fraction, by=lang_col, text_col=text_col,
             vocab_size=lm_vocab_size,
         ).select(kc)
+        gate_cached.append(take_gate_cache())
         cur = cur.join(lm_kept, kc, "left_semi")
         tick("lm_gate", cur)
 
@@ -433,6 +446,7 @@ def curate_documents(
             text_col=text_col,
             n_buckets=dsir_buckets,
         ).select(kc)
+        gate_cached.append(take_gate_cache())
         cur = cur.join(d_kept, kc, "left_semi")
         tick("dsir_gate", cur)
 
@@ -446,7 +460,8 @@ def curate_documents(
     if key_col != kc:
         out = out.withColumnRenamed(kc, key_col)
     return CurationResult(
-        out, funnel, _cached=cached if near_dup else None
+        out, funnel, _cached=cached if near_dup else None,
+        _gate_cached=gate_cached,
     )
 
 

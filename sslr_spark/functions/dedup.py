@@ -40,7 +40,8 @@ from sslr_spark.functions.text import words
 # is an executor OOM. Every persist goes through _persist(); each
 # top-level pair generator releases the PREVIOUS call's caches on
 # entry (callers may also release_caches() explicitly once results
-# are materialized).
+# are materialized). The quantile gates keep their own one-deep slot
+# in the same registry (persist_gate).
 # ------------------------------------------------------------------
 
 _CACHES = threading.local()  # per-thread: concurrent pipelines never
@@ -64,6 +65,14 @@ def _persist(df: DataFrame) -> DataFrame:
 register_cache = _persist
 
 
+def release_frames(dfs: list[DataFrame]) -> None:
+    """Unpersist ``dfs`` and drop them from this thread's registry."""
+    caches = _active()
+    for df in dfs:
+        df.unpersist()
+        caches[:] = [c for c in caches if c is not df]
+
+
 def release_caches() -> None:
     """Unpersist every cache created by THIS thread's pair generators.
 
@@ -76,6 +85,7 @@ def release_caches() -> None:
     caches = _active()
     while caches:
         caches.pop().unpersist()
+    _CACHES.gate = []
 
 
 @contextlib.contextmanager
@@ -95,10 +105,10 @@ def cache_scope():
     materialize with ``.count()``, write them out, or feed them to
     dup_clusters_star, never pull them to the driver.)
 
-    Inside the scope the generators' entry-release is suspended, so an
-    earlier call's not-yet-materialized result keeps its shingle-index
-    cache; everything persists until scope exit, then is released in
-    one sweep. Without a scope the default sequential entry-release
+    Inside the scope the generators' and the quantile gates'
+    entry-release is suspended, so an earlier call's
+    not-yet-materialized result keeps its cache; everything persists
+    until scope exit, then is released in one sweep. Without a scope the default sequential entry-release
     behavior applies unchanged."""
     _CACHES.suspended = getattr(_CACHES, "suspended", 0) + 1
     try:
@@ -114,6 +124,28 @@ def _entry_release() -> None:
     previous call's caches — unless a cache_scope() suspends it."""
     if not getattr(_CACHES, "suspended", 0):
         release_caches()
+
+
+def persist_gate(df: DataFrame) -> DataFrame:
+    """Registered persist for a quantile gate's scored frame. Releases
+    the previous gate call's cache first (unless a cache_scope()
+    suspends it), so repeated gate calls hold at most one. Only the
+    gate slot is released: a pipeline that gates while its pair
+    generators' caches still feed a lazy plan keeps those."""
+    gate = getattr(_CACHES, "gate", [])
+    if not getattr(_CACHES, "suspended", 0):
+        release_frames(gate)
+        gate = []
+    df = _persist(df)
+    _CACHES.gate = gate + [df]
+    return df
+
+
+def take_gate_cache() -> DataFrame:
+    """Detach the latest gate call's cache from the gate entry-release:
+    the caller now owns it and releases it with :func:`release_frames`.
+    For pipelines chaining several gates into one lazy plan."""
+    return _CACHES.gate.pop()
 
 
 def _cap_hot_shingles(sh: DataFrame, max_doc_freq: int | None) -> DataFrame:
@@ -1191,36 +1223,16 @@ def simhash(
     aggregation collapses every doc to one row per input partition
     before the exchange, so the only shuffle carries ~n_docs rows of
     ``bits`` longs, never tokens. Fingerprints are bit-identical to
-    the two-shuffle form (equality-tested)."""
-    import os
-
+    the two-shuffle form (equality-tested). No parallelism floor: the
+    explode feeds one map-side partial aggregate, so there is no
+    fan-out join to starve, and the scan's split count is kept."""
     word_hash = (
         h64_fast(F.col("word")) if hash_mode == "fast" else h60(F.col("word"))
     )
-    # Parallelism-floor placement ($SSLR_SIMHASH_FLOOR: off | text |
-    # hash). 'text' (the r11 shape) round-robins the raw documents —
-    # the repartition write of full text runs on the few scan tasks
-    # and was the r11 driver regression (0.68x, VERDICT item 2);
-    # 'hash' floors AFTER the tokenize+hash projection, shuffling
-    # only (doc_id, int64) occurrence rows; 'off' (default since
-    # r12) trusts the scan split count — the explode feeds one
-    # map-side partial aggregate, so there is no fan-out join to
-    # starve, and at scale any floor is a no-op anyway. Driver-shape
-    # A/B (r12, two independent interleaved sessions): text med
-    # 3.60/3.39 s, off 3.17/2.98, hash 3.32/2.97 — 'text' is the
-    # regression, 'off' and 'hash' tie; 'off' wins on zero extra
-    # shuffles.
-    mode = os.environ.get("SSLR_SIMHASH_FLOOR", "off")
-    base = df.select("doc_id", F.col(text_col))
-    if mode == "text":
-        base = _parallel_floor(base)
     occ = (
-        base
-        .select("doc_id", F.explode(words(F.col(text_col))).alias("word"))
+        df.select("doc_id", F.explode(words(F.col(text_col))).alias("word"))
         .select("doc_id", word_hash.alias("h"))
     )
-    if mode == "hash":
-        occ = _parallel_floor(occ)
     # one aggregation with `bits` conditional sums — no bit explode and
     # no per-word pre-aggregate; the fingerprint assembles from the agg
     # columns without a further shuffle
@@ -2040,33 +2052,38 @@ def incremental_minhash_dedup(
     )
 
 
-def _dup_clusters_star_fused(
+def dup_clusters_star(
     pairs: DataFrame,
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_rounds: int = 40,
 ) -> DataFrame:
-    """Alternating large-star/small-star CC over ADJACENCY ARRAYS —
-    the fused round form (round 12, guide §2.4: remove shuffles and
-    stages outright).
+    """Connected components by alternating large-star / small-star —
+    O(log n) rounds regardless of component diameter (the published
+    MapReduce CC recurrence; min-label propagation needs O(diameter)
+    joins, which a 10k-long near-dup chain turns into 10k shuffles).
 
-    Same recurrence and output contract as the ``join`` form in
-    :func:`dup_clusters_star`; what changes is the physical shape.
-    The round state is one row per node ``(src, arr)`` with ``arr`` =
-    the distinct neighbor set, so each phase's per-node minimum is
-    ``least(src, array_min(arr))`` — a map-side expression — and the
-    phase's emitted edges come from exploding a filtered copy of the
-    array instead of joining the edge set back onto an aggregate of
-    itself. Per round: TWO exchanges (re-group large-star output by
-    its new key; re-group small-star output into next round's
-    adjacency) and ~3 stages, vs three exchanges across ~6 stages for
-    the row form — the row form pays a third exchange because a
-    ``localCheckpoint`` does not carry partitioning across rounds, so
-    its canonicalizing distinct cannot serve the next round's
-    min-aggregate (measured: probe2 in OPTIMIZATION_r12.md).
-    The checkpoint-per-round / one-job-per-round structure is kept:
-    the signature aggregate at the top of each round materializes the
-    lazily-checkpointed adjacency.
+    Same output contract as :func:`dup_clusters`: (doc_id, cluster_id)
+    with cluster_id = the component's smallest doc_id; a node whose
+    only edge is a self-loop is its own cluster.
+
+    Each round:
+    - large-star: every node u links its LARGER neighbors to the
+      minimum of its closed neighborhood;
+    - small-star: every node u links its smaller-or-equal neighbors
+      (and itself) to that minimum.
+    The edge set monotonically contracts to stars centered at
+    component minima.
+
+    Round shape: the state is one row per node ``(src, arr)`` with
+    ``arr`` = the distinct neighbor set, so each phase's per-node
+    minimum is ``least(src, array_min(arr))`` — a map-side expression
+    — and the phase's emitted edges come from exploding a filtered
+    copy of the array instead of joining the edge set back onto an
+    aggregate of itself: two exchanges and ~3 stages per round. A
+    lazily-marked localCheckpoint per round keeps the plan flat while
+    the signature aggregate at the top of each round doubles as the
+    materializing action — ONE job per round.
 
     Convergence: the signature hashes the SYMMETRIC adjacency (sum of
     degrees + order-insensitive xor of per-edge hashes) — the round
@@ -2076,15 +2093,18 @@ def _dup_clusters_star_fused(
     exactly one neighbor (``max(when(array_min(arr) < src,
     size(arr)).otherwise(1)) == 1``) — no separate probe job. Labels
     read map-side off the final adjacency (``least(src,
-    array_min(arr))``), with no nodes join.
+    array_min(arr))``), with no nodes join. Self-loops are masked out
+    of the neighbor sets, so a self-loop-only node holds an empty
+    array in the round-0 adjacency; the rounds never see it, and its
+    ``(id, id)`` label is read back off that checkpointed adjacency
+    (``pairs`` is not re-read: it is usually a lazy pair-generation
+    pipeline).
 
-    Memory note (the reason ``join`` stays selectable): a node's
-    whole neighbor set lives in one aggregation buffer / one row, and
-    at the fixpoint a component's center holds the full component —
-    ~8 bytes x cluster size for long ids (a 10M-doc near-dup cluster
-    = an 80 MB row: fine; a 1B-doc cluster would not be). The row
-    form spreads the same star across rows and survives arbitrarily
-    large components.
+    Limit: a node's whole neighbor set lives in one aggregation
+    buffer / one row, and at the fixpoint a component's center holds
+    the full component — ~8 bytes x cluster size for long ids (a
+    10M-doc near-dup cluster = an 80 MB row: fine; a 1B-doc cluster
+    would not be).
     """
     edges0 = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
 
@@ -2093,11 +2113,13 @@ def _dup_clusters_star_fused(
 
     def sym_adj(e: DataFrame) -> DataFrame:
         # symmetric adjacency: one row per node, distinct neighbors
-        # (collect_set = the canonicalizing distinct, same exchange)
+        # other than itself (collect_set = the canonicalizing
+        # distinct, same exchange; it skips the masked-out nulls)
+        nbr = F.when(F.col("src") != F.col("dst"), F.col("dst"))
         return (
             e.unionByName(swap(e))
             .groupBy("src")
-            .agg(F.collect_set("dst").alias("arr"))
+            .agg(F.collect_set(nbr).alias("arr"))
             .localCheckpoint(eager=False)
         )
 
@@ -2105,7 +2127,7 @@ def _dup_clusters_star_fused(
         # one job: materializes the lazy checkpoint, returns the
         # convergence signature + the star test, all from one pass.
         # bit_xor of per-row xor-folds is order-insensitive and
-        # overflow-free (ANSI-safe), like the row form's signature.
+        # overflow-free (ANSI-safe).
         row = adj.agg(
             F.sum(F.size("arr")).alias("n"),
             F.expr(
@@ -2137,7 +2159,7 @@ def _dup_clusters_star_fused(
             .select(F.explode(out).alias("src"), F.col("m").alias("dst"))
         )
 
-    adj = sym_adj(edges0)
+    adj0 = adj = sym_adj(edges0)
     prev = None
     for _ in range(max_rounds):
         sig, maxdeg_child = sig_and_star(adj)
@@ -2161,168 +2183,16 @@ def _dup_clusters_star_fused(
             stacklevel=2,
         )
 
-    return adj.select(
+    labels = adj.select(
         F.col("src").alias("doc_id"),
         F.least(F.col("src"), F.array_min("arr")).alias("cluster_id"),
     )
-
-
-def dup_clusters_star(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_rounds: int = 40,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star —
-    O(log n) rounds regardless of component diameter (the published
-    MapReduce CC recurrence; min-label propagation needs O(diameter)
-    joins, which a 10k-long near-dup chain turns into 10k shuffles).
-
-    Same output contract as :func:`dup_clusters`: (doc_id, cluster_id)
-    with cluster_id = the component's smallest doc_id.
-
-    Each round:
-    - large-star: every node u links its LARGER neighbors to the
-      minimum of its closed neighborhood;
-    - small-star: every node u links its smaller-or-equal neighbors
-      (and itself) to that minimum.
-    The edge set monotonically contracts to stars centered at
-    component minima; convergence is detected by the edge multiset
-    hash going stable. A lazily-marked localCheckpoint per round keeps
-    the plan flat while the signature aggregate doubles as the
-    materializing action — ONE job per round.
-
-    Round shape (r11 optimization, guide §2.4 — remove shuffles and
-    jobs outright; round results equality-tested against the prior
-    form):
-    - the per-phase ``.distinct()`` and the between-phase
-      symmetrize-``distinct`` are gone: duplicate edges cannot change
-      a per-node MIN, the phase joins fan out only on exact ``src``
-      matches, and the single end-of-round distinct canonicalizes the
-      checkpointed set — three shuffles per round instead of six;
-    - checkpoints are marked LAZY and the signature aggregate is the
-      materializing action — one job per round instead of two (the
-      initial symmetrized set materializes inside round 0 the same
-      way);
-    - a direct star test short-circuits the final detection round:
-      when every child has exactly one parent (row count ==
-      distinct-src count, free in the signature aggregate) and no
-      parent is itself a child (one tiny semi-join probe on the
-      checkpointed set), the edges already ARE the fixpoint stars —
-      running another large+small round would reproduce them exactly,
-      so the loop exits without paying it.
-
-    Round-shape knob (round 12, guide §2.4): ``$SSLR_CC_ROUND``
-    selects ``fused`` (default — adjacency-array rounds, two
-    exchanges and ~3 stages per round, see
-    :func:`_dup_clusters_star_fused`) or ``join`` (this function's
-    r11 row-form rounds, three exchanges and ~6 stages per round).
-    Labels are identical (equality-tested); ``join`` remains the
-    escape hatch for graphs whose components are so large that one
-    node's full neighbor set must not be collected into a single
-    array (see the fused docstring's memory note).
-    """
-    import os
-
-    if os.environ.get("SSLR_CC_ROUND", "fused") != "join":
-        return _dup_clusters_star_fused(pairs, id_a, id_b, max_rounds)
-
-    def swap(e: DataFrame) -> DataFrame:
-        return e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-
-    def und(e: DataFrame) -> DataFrame:
-        # undirected view WITHOUT a distinct: consumers below are
-        # min-aggregations and equi-joins whose final distinct
-        # canonicalizes — duplicates are harmless in between
-        return e.unionByName(swap(e))
-
-    def mins_of(e: DataFrame) -> DataFrame:
-        # closed-neighborhood minimum per node
-        return (
-            e.groupBy("src")
-            .agg(F.min("dst").alias("nmin"))
-            .select("src", F.least(F.col("src"), F.col("nmin")).alias("m"))
-        )
-
-    def sig(e: DataFrame):
-        # bit_xor: commutative AND overflow-free (ANSI mode errors on
-        # summing 64-bit hashes). n_src rides along for the star test.
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-            F.countDistinct("src").alias("n_src"),
-        ).first()
-        return (row["n"], row["h"]), row["n_src"]
-
-    edges_sym = (
-        und(pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
+    if adj is adj0:
+        return labels
+    isolated = adj0.filter(F.size("arr") == 0).select(
+        F.col("src").alias("doc_id"), F.col("src").alias("cluster_id")
     )
-    nodes = edges_sym.select("src").distinct()
-
-    prev = None
-    edges = edges_sym
-    cur_und = edges_sym  # initial set enters already symmetric
-    for _ in range(max_rounds):
-        m1 = mins_of(cur_und)
-        large = (
-            cur_und.join(m1, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        )
-        u2 = und(large)
-        m2 = mins_of(u2)
-        small = (
-            u2.join(m2, "src")
-            .filter(F.col("dst") <= F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .unionByName(m2.select("src", F.col("m").alias("dst")))
-        )
-        edges = (
-            small.filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        cur, n_src = sig(edges)
-        if cur == prev:
-            break
-        if cur[0] == n_src:
-            # every child points at exactly one parent; if additionally
-            # no parent appears as a child, the edges are disjoint
-            # stars centered at their components' minima (small-star
-            # always emits dst = a closed-neighborhood min < src) —
-            # the fixpoint, exit without a detection round
-            overlap = (
-                edges.select(F.col("dst").alias("src"))
-                .join(edges, "src", "left_semi")
-                .take(1)
-            )
-            if not overlap:
-                break
-        prev = cur
-        cur_und = und(edges)
-    else:
-        import warnings
-
-        warnings.warn(
-            f"dup_clusters_star did not stabilize in {max_rounds} rounds",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-
-    # edges now form stars: src -> component min. Nodes that ended up
-    # as centers map to themselves.
-    labels = (
-        nodes.join(
-            edges.groupBy("src").agg(F.min("dst").alias("m")), "src", "left"
-        )
-        .select(
-            F.col("src").alias("doc_id"),
-            F.coalesce(F.col("m"), F.col("src")).alias("cluster_id"),
-        )
-    )
-    return labels
+    return labels.unionByName(isolated)
 
 
 # ------------------------------------------------------------------

@@ -1190,8 +1190,7 @@ def stream_sessionize(
 
     ``state_store``: state-store provider for a NEW checkpoint —
     'rocksdb' / 'hdfs' / a raw provider class; None (default) keeps
-    the session conf (HDFS-backed). Also settable via
-    ``$SSLR_STATE_STORE``. Measured r12 A/B at sf0.1 (driver shape,
+    the session conf (HDFS-backed). Measured r12 A/B at sf0.1 (driver shape,
     fresh JVM per sample, 3 availableNow batches): hdfs min 8.24 /
     med 9.39 s vs rocksdb min 9.87 / med 14.08 s — RocksDB pays
     native-store open/commit per partition per micro-batch, which
@@ -1303,9 +1302,7 @@ def stream_sessionize(
         )
     )
     with _shuffle_partitions_scope(spark, state_partitions), \
-            _state_store_scope(
-                spark, state_store or os.environ.get("SSLR_STATE_STORE")
-            ):
+            _state_store_scope(spark, state_store):
         q = (
             sessions.writeStream.format("parquet")
             .option("path", out_dir)

@@ -1,17 +1,14 @@
-"""Round 12 fixes: ADVICE r11 items + optimization-variant equivalence.
-
-Every optimization knob this round introduces must be result-neutral;
-these tests pin that, plus the two ADVICE r11 engine items and the
-new opt-in doc_id-unique contract guard.
+"""Round 12 fixes and their follow-ups: ADVICE r11 items, the opt-in
+doc_id-unique contract guard, star-CC equality with the dup_clusters
+reference, bounded quantile-gate caches, and the scale-corpus
+generator's replica projection.
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _docs(spark, rows):
@@ -95,59 +92,11 @@ class TestDoubleArrayLiteral:
         assert math.isnan(got[3])
 
 
-class TestSimhashFloorVariantsIdentical:
-    """$SSLR_SIMHASH_FLOOR placements must be fingerprint-identical —
-    the knob only moves WHERE the parallelism floor applies."""
-
-    @pytest.mark.parametrize("mode", ["off", "hash"])
-    def test_fingerprints_equal(self, spark, monkeypatch, mode):
-        from sslr_spark.functions.dedup import simhash
-
-        df = _docs(spark, DOCS)
-        monkeypatch.setenv("SSLR_SIMHASH_FLOOR", "text")
-        base = {r["doc_id"]: r["simhash"] for r in simhash(df).collect()}
-        monkeypatch.setenv("SSLR_SIMHASH_FLOOR", mode)
-        got = {r["doc_id"]: r["simhash"] for r in simhash(df).collect()}
-        assert got == base
-
-
-class TestGateHistVariantsIdentical:
-    """$SSLR_GATE_HIST materialization modes must be result-identical —
-    the knob only changes whether the bounded histogram is pinned."""
-
-    @pytest.mark.parametrize("mode", ["plain", "ckpt", "scored"])
-    def test_quantile_gate_results_equal(self, spark, monkeypatch, mode):
-        from sslr_spark.functions import dedup as DD
-        from sslr_spark.functions.quality_model import (
-            score_bp_quantile_gate,
-        )
-
-        scored = spark.createDataFrame(
-            [(i, "en" if i % 3 else "de", (i * 37) % 100) for i in range(60)],
-            "doc_id long, lang string, score_bp int",
-        )
-        monkeypatch.setenv("SSLR_GATE_HIST", "plain")
-        base = sorted(
-            map(tuple, score_bp_quantile_gate(scored, 0.5, "lang").collect())
-        )
-        monkeypatch.setenv("SSLR_GATE_HIST", mode)
-        try:
-            got = sorted(
-                map(
-                    tuple,
-                    score_bp_quantile_gate(scored, 0.5, "lang").collect(),
-                )
-            )
-        finally:
-            DD.release_caches()  # 'scored' mode registers a persist
-        assert got == base
-        assert len(base) >= 60 * 0.5 * 0.9  # sanity: gate kept ~half
-
-
 class TestCcRoundVariantsIdentical:
-    """$SSLR_CC_ROUND forms (fused adjacency-array vs r11 join rounds)
-    must produce identical (doc_id, cluster_id) labels — the knob only
-    changes the physical round shape."""
+    """dup_clusters_star (O(log n) star rounds) must produce the same
+    (doc_id, cluster_id) labels as the dup_clusters min-label
+    propagation reference, on every graph shape — self-loops
+    included."""
 
     GRAPHS = {
         "chain": [(i, i + 1) for i in range(1, 30)],
@@ -156,51 +105,159 @@ class TestCcRoundVariantsIdentical:
         "self_loop": [(5, 5), (5, 6)],
         "multi_component": [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10)],
         "dup_and_reversed_edges": [(2, 1), (1, 2), (3, 2), (2, 3), (7, 9)],
+        "isolated_self_loop_and_chain": [
+            (9, 9), (1, 2), (2, 3), (3, 4), (4, 5),
+        ],
+        "only_self_loops": [(7, 7), (8, 8)],
+        "chain_with_inner_self_loop": [
+            (1, 2), (2, 3), (3, 3), (3, 4), (4, 5), (5, 6),
+        ],
     }
 
-    @pytest.mark.parametrize("name", sorted(GRAPHS))
-    def test_labels_equal(self, spark, monkeypatch, name):
-        from sslr_spark.functions.dedup import dup_clusters_star
+    @staticmethod
+    def _both(pairs):
+        from sslr_spark.functions.dedup import dup_clusters, dup_clusters_star
 
+        base = sorted(
+            map(tuple, dup_clusters(pairs, max_iterations=200).collect())
+        )
+        got = sorted(map(tuple, dup_clusters_star(pairs).collect()))
+        return base, got
+
+    @pytest.mark.parametrize("name", sorted(GRAPHS))
+    def test_labels_equal(self, spark, name):
         pairs = spark.createDataFrame(
             self.GRAPHS[name], "doc_a long, doc_b long"
         )
-        monkeypatch.setenv("SSLR_CC_ROUND", "join")
-        base = sorted(map(tuple, dup_clusters_star(pairs).collect()))
-        monkeypatch.setenv("SSLR_CC_ROUND", "fused")
-        got = sorted(map(tuple, dup_clusters_star(pairs).collect()))
+        base, got = self._both(pairs)
         assert got == base
-        # every cluster_id is its component's minimum member
+        # every node appears once; every cluster_id is its component's
+        # minimum member
+        nodes = {x for e in self.GRAPHS[name] for x in e}
+        assert sorted(doc for doc, _ in got) == sorted(nodes)
         by_cluster: dict = {}
         for doc, c in got:
             by_cluster.setdefault(c, []).append(doc)
         assert all(c == min(docs) for c, docs in by_cluster.items())
 
-    def test_labels_equal_random_graph(self, spark, monkeypatch):
+    def test_labels_equal_random_graph(self, spark):
         import random
-
-        from sslr_spark.functions.dedup import dup_clusters_star
 
         rng = random.Random(7)
         edges = [
             (rng.randint(1, 150), rng.randint(1, 150)) for _ in range(250)
         ]
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        monkeypatch.setenv("SSLR_CC_ROUND", "join")
-        base = sorted(map(tuple, dup_clusters_star(pairs).collect()))
-        monkeypatch.setenv("SSLR_CC_ROUND", "fused")
-        got = sorted(map(tuple, dup_clusters_star(pairs).collect()))
+        base, got = self._both(pairs)
         assert got == base
 
-    def test_labels_equal_string_ids(self, spark, monkeypatch):
-        from sslr_spark.functions.dedup import dup_clusters_star
-
+    def test_labels_equal_string_ids(self, spark):
         pairs = spark.createDataFrame(
             [("a", "b"), ("b", "c"), ("x", "y")],
             "doc_a string, doc_b string",
         )
-        monkeypatch.setenv("SSLR_CC_ROUND", "join")
-        base = sorted(map(tuple, dup_clusters_star(pairs).collect()))
-        monkeypatch.setenv("SSLR_CC_ROUND", "fused")
-        got = sorted(map(tuple, dup_clusters_star(pairs).collect()))
+        base, got = self._both(pairs)
         assert got == base
+
+    def test_labels_equal_string_ids_isolated_self_loop(self, spark):
+        pairs = spark.createDataFrame(
+            [("a", "b"), ("b", "c"), ("c", "d"), ("z", "z")],
+            "doc_a string, doc_b string",
+        )
+        base, got = self._both(pairs)
+        assert got == base
+        assert ("z", "z") in got
+
+
+class TestGateCacheBounded:
+    """Repeated quantile-gate calls in one long-lived session must not
+    pile up persisted score caches: each call releases the previous
+    call's on entry."""
+
+    @staticmethod
+    def _scored(spark, seed):
+        return spark.createDataFrame(
+            [(i, "en" if i % 3 else "de", (i * seed) % 100) for i in range(60)],
+            "doc_id long, lang string, score_bp int",
+        )
+
+    def test_sequential_gate_calls_hold_at_most_one_cache(self, spark):
+        from sslr_spark.functions import dedup as DD
+        from sslr_spark.functions.quality_model import score_bp_quantile_gate
+
+        DD.release_caches()
+        try:
+            for seed in (31, 37, 41, 43, 47):
+                kept = score_bp_quantile_gate(
+                    self._scored(spark, seed), 0.5, "lang"
+                )
+                assert kept.count() >= 60 * 0.5 * 0.9
+            assert len(DD._active()) <= 1
+        finally:
+            DD.release_caches()
+
+    def test_cache_scope_suspends_gate_release(self, spark):
+        from sslr_spark.functions import dedup as DD
+        from sslr_spark.functions.quality_model import score_bp_quantile_gate
+
+        DD.release_caches()
+        with DD.cache_scope():
+            a = score_bp_quantile_gate(self._scored(spark, 31), 0.5, "lang")
+            b = score_bp_quantile_gate(self._scored(spark, 37), 0.5, "lang")
+            a.count(), b.count()
+            assert len(DD._active()) == 2
+            assert all(df.is_cached for df in DD._active())
+        assert DD._active() == []
+
+    def test_curation_owns_its_chained_gate_caches(self, spark):
+        from sslr_spark.curation import curate_documents
+        from sslr_spark.functions import dedup as DD
+
+        rows = [
+            (i, "en" if i % 2 else "de", "web",
+             f"document {i} " + "word%d " % (i % 5) * (10 + i % 7))
+            for i in range(40)
+        ]
+        df = spark.createDataFrame(
+            rows, "doc_id long, lang string, source string, text string"
+        )
+        DD.release_caches()
+        res = curate_documents(
+            df,
+            quality_weights=[0.1, 0.1, 0.1, 0.1],
+            quality_bias=0.0,
+            keep_fraction=0.8,
+            lm_keep_fraction=0.8,
+            gopher=False,
+            n_shards=None,
+        )
+        try:
+            assert res.df.count() > 0
+            # the LM gate did not release the quality gate's scores,
+            # which the same lazy plan still reads
+            assert len(res._gate_cached) == 2
+            assert all(g.is_cached for g in res._gate_cached)
+            res.release()
+            assert res._gate_cached == []
+            assert DD._active() == []
+        finally:
+            DD.release_caches()
+
+
+def test_gen_scale_corpus_replicas_drop_extra_columns(spark):
+    from tools.gen_scale_corpus import ID_OFFSET, doc_rep, reps
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f g h", "en", "web", 15, "extra")],
+        "doc_id long, text string, lang string, source string, "
+        "n_chars int, note string",
+    )
+    out = reps(df, doc_rep, 3).collect()
+    assert next(r for r in out if r.doc_id == 1).asDict() == {
+        "doc_id": 1, "text": "a b c d e f g h", "lang": "en",
+        "source": "web", "n_chars": 15,
+    }
+    assert sorted(r.doc_id for r in out) == [
+        1, 1 + ID_OFFSET, 1 + 2 * ID_OFFSET,
+    ]
+    assert all(r.n_chars == len(r.text) for r in out)

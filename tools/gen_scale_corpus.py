@@ -10,9 +10,10 @@ via $SPARK_GRAFT_SF_DIR for `bench.py --only` runs whose 8-vs-32-core
 RATIO is the measurement.
 
 Construction (seedless, fully deterministic):
-- documents: FACTOR replicas; replica 0 is the original; replica i>0
-  offsets doc_id by i*ID_OFFSET and replaces every 7th word (phase
-  i mod 7) with a replica-specific token. This preserves corpus
+- documents: FACTOR replicas, all projected to (doc_id, text, lang,
+  source, n_chars); replica 0 is the original; replica i>0 offsets
+  doc_id by i*ID_OFFSET and replaces every 7th word (phase i mod 7)
+  with a replica-specific token. This preserves corpus
   word/length statistics and the WITHIN-replica near-dup structure,
   while cross-replica pairs sit at jaccard ~0.4-0.6 — below the
   prefix/containment thresholds (0.8/0.4), above minhash's 0.1, so
@@ -37,6 +38,40 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 ID_OFFSET = 1 << 40
 
 
+def reps(df, build, factor: int):
+    """Union of ``build(df, i)`` for replicas ``i`` in ``[0, factor)``."""
+    parts = [build(df, i) for i in range(factor)]
+    u = parts[0]
+    for p in parts[1:]:
+        u = u.unionByName(p)
+    return u
+
+
+def doc_rep(df, i: int):
+    """Documents replica ``i``: id offset + every-7th-word replacement
+    for i > 0. Every replica, the original included, goes through the
+    same projection, so extra input columns never reach the union."""
+    from pyspark.sql import functions as F
+
+    text = F.col("text")
+    if i > 0:
+        tok = F.lit(f"zrep{i}tok")
+        text = F.array_join(
+            F.transform(
+                F.split(text, " "),
+                lambda w, pos: F.when((pos % 7) == (i % 7), tok).otherwise(w),
+            ),
+            " ",
+        )
+    return df.select(
+        (F.col("doc_id") + F.lit(i * ID_OFFSET)).alias("doc_id"),
+        text.alias("text"),
+        "lang",
+        "source",
+        F.length(text).alias("n_chars"),
+    )
+
+
 def main() -> None:
     src, out = sys.argv[1], sys.argv[2]
     factor = int(sys.argv[3]) if len(sys.argv) > 3 else 10
@@ -48,37 +83,8 @@ def main() -> None:
     spark = get_spark(app_name="gen_scale_corpus")
     os.makedirs(out, exist_ok=True)
 
-    def reps(df, build):
-        parts = [build(df, i) for i in range(factor)]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        return u
-
-    # documents: id offset + every-7th-word replacement for i > 0
     docs = spark.read.parquet(f"{src}/documents.parquet")
-
-    def doc_rep(df, i):
-        if i == 0:
-            return df
-        tok = F.lit(f"zrep{i}tok")
-        words = F.split(F.col("text"), " ")
-        perturbed = F.array_join(
-            F.transform(
-                words,
-                lambda w, pos: F.when((pos % 7) == (i % 7), tok).otherwise(w),
-            ),
-            " ",
-        )
-        return df.select(
-            (F.col("doc_id") + F.lit(i * ID_OFFSET)).alias("doc_id"),
-            perturbed.alias("text"),
-            "lang",
-            "source",
-            F.length(perturbed).alias("n_chars"),
-        )
-
-    reps(docs, doc_rep).coalesce(8).write.mode("overwrite").parquet(
+    reps(docs, doc_rep, factor).coalesce(8).write.mode("overwrite").parquet(
         f"{out}/documents.parquet"
     )
 
@@ -88,6 +94,7 @@ def main() -> None:
         lambda df, i: df.withColumn(
             "user_id", F.col("user_id") + F.lit(i * ID_OFFSET)
         ).withColumn("event_id", F.col("event_id") + F.lit(i * ID_OFFSET)),
+        factor,
     ).coalesce(8).write.mode("overwrite").parquet(f"{out}/events.parquet")
 
     emb = spark.read.parquet(f"{src}/embeddings.parquet")
@@ -96,6 +103,7 @@ def main() -> None:
         lambda df, i: df.withColumn(
             "vec_id", F.col("vec_id") + F.lit(i * ID_OFFSET)
         ),
+        factor,
     ).coalesce(8).write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
 
     li = spark.read.parquet(f"{src}/lineitem.parquet")
@@ -104,6 +112,7 @@ def main() -> None:
         lambda df, i: df.withColumn(
             "l_orderkey", F.col("l_orderkey") + F.lit(i * ID_OFFSET)
         ),
+        factor,
     ).coalesce(16).write.mode("overwrite").parquet(f"{out}/lineitem.parquet")
 
     orders = spark.read.parquet(f"{src}/orders.parquet")
@@ -111,6 +120,7 @@ def main() -> None:
     reps(
         orders,
         lambda df, i: df.withColumn(okey, F.col(okey) + F.lit(i * ID_OFFSET)),
+        factor,
     ).coalesce(8).write.mode("overwrite").parquet(f"{out}/orders.parquet")
 
     for dim in ["region", "nation", "customer", "supplier", "part"]:
