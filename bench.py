@@ -112,6 +112,10 @@ def main(only: set[str] | None = None) -> dict:
         extra_conf = {
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": ev_dir,
+            # Spark 4.1 defaults to rolling zstd logs; pin the plain
+            # single-file format tools/analyze_eventlog.py reads best
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
         }
     spark = get_spark(app_name="sslr_bench", extra_conf=extra_conf)
     timings: dict[str, float] = {}

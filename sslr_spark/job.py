@@ -6,6 +6,8 @@ Mirrors the reference's job layer (internal/job.go):
 - schema drift -> abort or recreate+force-resync (:129-153);
 - where-clause drift detected through the state table (:185-209);
 - update phase = incremental upsert sync then delete sync (:246-292);
+  on a bucket-partitioned copy-on-write target the two share one
+  write per pass (see Job.update_table);
 - run-once vs continuous polling loop (reference main.go:38-82).
 
 Filtered tables' predicates may reference their 'uses' dependencies;
@@ -207,7 +209,15 @@ class Job:
         internal/deletes.go:29) — a shared instance would sum source
         time across tables/threads and overshoot the sleep. An
         explicitly passed ``throttle`` is used for both phases
-        (tests / callers that want a shared budget)."""
+        (tests / callers that want a shared budget).
+
+        Update phase, then delete phase — except on an incremental pass
+        against a bucket-partitioned copy-on-write target, where
+        sync_updates decides the delete repair from the virtual
+        post-merge diff before writing and applies merge and repair in
+        ONE write of the last batch (each bucket rewritten at most once
+        per pass); the separate delete phase is then skipped for the
+        table."""
         where = self.config.where_for(table)
         pks = self.primary_keys[table]
         src = self.source_df(table)
@@ -227,6 +237,7 @@ class Job:
                 )
             self._maintenance(table, result)
             return
+        repairs: list = []
         rows = sync_updates(
             src,
             self.target,
@@ -252,6 +263,7 @@ class Job:
             merge_on_read=self.config.merge_on_read,
             max_log_fraction=self.config.merge_on_read_max_log,
             max_log_bytes=self.config.merge_on_read_max_log_bytes,
+            repairs=repairs if self.config.sync_deletes else None,
         )
         result.updated_rows += rows
         versionless = self.config.version_column not in src.columns
@@ -266,6 +278,11 @@ class Job:
             # bucket fingerprints per pass for nothing.
             result.full_copies.append(table)
             self.force_full.discard(table)
+        elif repairs:
+            # the delete repair rode in the update phase's write
+            result.repaired_buckets += sum(
+                r.mismatched_buckets for r in repairs
+            )
         elif self.config.sync_deletes:
             self._sync_deletes_phase(
                 table, src, pks, where, n_buckets, result,

@@ -16,6 +16,16 @@ trips. Repair replaces exactly the mismatched buckets' rows with the
 source's rows for those buckets (the J3 range-repair semantics, with
 hash buckets instead of key ranges).
 
+Bucket-partitioned copy-on-write targets decide the repair BEFORE the
+update phase writes (:func:`sync_deletes_partitioned` with
+``updates``): a merge never removes a key, so the post-merge key
+multiset is the target's plus the slice keys it lacks, and its
+fingerprint is the diff's input without the merge having run. One
+write then applies both — repaired buckets take the source's rows,
+the other touched buckets take the merge — so a pass rewrites each
+bucket at most once (Delta's one-rewrite-per-touched-file MERGE rule,
+with bucket partitions as the files).
+
 Scale notes: both fingerprint scans are key-column-only (column-pruned
 at the parquet/JDBC scan) and reduce map-side before a shuffle of at
 most n_buckets rows; the fingerprint join is broadcast-sized. Repair
@@ -92,22 +102,24 @@ def effective_buckets(target, table: str, n_buckets: int | None) -> int | None:
         return None
     if not target.table_exists(table):
         return n_buckets  # fresh table: created in the configured layout
-    if BUCKET_COL not in target.read(table, with_meta=True).columns:
-        warnings.warn(
-            f"table {table!r} has no {BUCKET_COL} layout; running "
-            "unpartitioned merge/repair (a full copy migrates it)",
-            stacklevel=2,
-        )
-        return None
+    # the marker is written only together with the partitioned layout,
+    # so a marked table needs no listing; only unmarked tables are read
     meta = target.layout_meta(table) if hasattr(target, "layout_meta") else None
     stored = (meta or {}).get("n_buckets")
     if not stored:
-        warnings.warn(
-            f"table {table!r} is bucket-partitioned but has no layout "
-            "marker (pre-marker layout); running unpartitioned "
-            "merge/repair (a full copy re-buckets it)",
-            stacklevel=2,
-        )
+        if BUCKET_COL not in target.read(table, with_meta=True).columns:
+            warnings.warn(
+                f"table {table!r} has no {BUCKET_COL} layout; running "
+                "unpartitioned merge/repair (a full copy migrates it)",
+                stacklevel=2,
+            )
+        else:
+            warnings.warn(
+                f"table {table!r} is bucket-partitioned but has no layout "
+                "marker (pre-marker layout); running unpartitioned "
+                "merge/repair (a full copy re-buckets it)",
+                stacklevel=2,
+            )
         return None
     if stored != n_buckets:
         warnings.warn(
@@ -218,6 +230,16 @@ def stored_bucket_hash(target, table: str) -> str:
     return (meta or {}).get("bucket_hash", "portable")
 
 
+def _fingerprint(df: DataFrame, pk_cols: list[str], kh) -> DataFrame:
+    """Per-bucket (cnt, fp) of a frame carrying the stored bucket
+    column."""
+    return (
+        df.select(F.col(BUCKET_COL).cast("long").alias("bucket"), kh(pk_cols).alias("kh"))
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("cnt"), F.expr("bit_xor(kh)").alias("fp"))
+    )
+
+
 def sync_deletes_partitioned(
     source_df: DataFrame,
     target: ParquetDatabase,
@@ -227,14 +249,35 @@ def sync_deletes_partitioned(
     where: str | None = None,
     throttle=None,
     hash_mode: str = "portable",
+    updates: DataFrame | None = None,
 ) -> DeleteSyncStats:
     """Delete sync against a bucket-partitioned target
     (``<table>.parquet/__sslr_bucket=N/``): identical diff protocol to
     :func:`sync_deletes`, but repair rewrites ONLY the mismatched
-    partitions via dynamic partition overwrite — cost proportional to
-    divergence, not table size. This is the 100 TB path; the
-    whole-table variant remains for unpartitioned targets.
+    partitions — cost proportional to divergence, not table size. This
+    is the 100 TB path; the whole-table variant remains for
+    unpartitioned targets.
+
+    ``updates`` (a deduplicated CDC batch, as merge_upsert_partitioned
+    takes it) folds the update phase's merge into the same write. The
+    repair set is decided BEFORE anything is written, against the
+    virtual post-merge target: a merge never removes a key, so the
+    merged table's key multiset is the target's plus the batch keys the
+    target lacks (one anti-join of the batch keys against the pruned
+    key columns of the touched buckets). Its fingerprint equals the one
+    a diff after the merge would see, so the repair set is the same — on a target holding duplicate key rows it can only be
+    larger, never smaller. Then ONE write (updates.rewrite_buckets):
+    repaired buckets take the source's rows, the other touched buckets
+    take the merge, emptied buckets are dropped. The diff, the new-key
+    probe and the merge's kept rows share one target read, so the
+    table is listed once. Without ``updates`` this is the repair alone.
+
+    Crash contract: same as the merge — the caller commits state after
+    this returns, and a replay recomputes the diff over whatever mix of
+    rewritten buckets a crash left and converges to the same table.
     """
+    from sslr_spark.operators.updates import bucket_ids, rewrite_buckets
+
     src = filtered_source(source_df, where)
     tgt = target.read(table, with_meta=True)
 
@@ -242,49 +285,51 @@ def sync_deletes_partitioned(
     # both sides; only the ephemeral fingerprint hash follows hash_mode
     bmode = stored_bucket_hash(target, table)
     _, _kh = _hash_fns(hash_mode)
-    s_fp = (
-        with_bucket(src, pk_cols, n_buckets, bmode)
-        .select(F.col(BUCKET_COL).alias("bucket"), _kh(pk_cols).alias("kh"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.expr("bit_xor(kh)").alias("fp"))
-    )
-    # the stored partition column prunes the target scan to key columns
-    t_fp = (
-        tgt.select(
-            F.col(BUCKET_COL).cast("long").alias("bucket"),
-            _kh(pk_cols).alias("kh"),
+    src_b = with_bucket(src, pk_cols, n_buckets, bmode)
+    upd = None
+    if updates is not None:
+        upd = with_bucket(updates, pk_cols, n_buckets, bmode).persist()
+    try:
+        affected = bucket_ids(upd) if upd is not None else []
+        # the stored partition column prunes the target scan to key
+        # columns; the batch's new keys join the target's to form the
+        # post-merge key multiset
+        t_keys = tgt.select(BUCKET_COL, *pk_cols)
+        if affected:
+            new_keys = upd.select(BUCKET_COL, *pk_cols).join(
+                t_keys.filter(F.col(BUCKET_COL).isin(affected)).select(*pk_cols),
+                pk_cols,
+                "left_anti",
+            )
+            t_keys = t_keys.unionByName(new_keys)
+        s_fp = _fingerprint(src_b, pk_cols, _kh)
+        t_fp = _fingerprint(t_keys, pk_cols, _kh)
+        joined = s_fp.withColumnsRenamed({"cnt": "s_cnt", "fp": "s_fp"}).join(
+            t_fp.withColumnsRenamed({"cnt": "t_cnt", "fp": "t_fp"}), "bucket", "full_outer"
         )
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.expr("bit_xor(kh)").alias("fp"))
-    )
-    joined = s_fp.withColumnsRenamed({"cnt": "s_cnt", "fp": "s_fp"}).join(
-        t_fp.withColumnsRenamed({"cnt": "t_cnt", "fp": "t_fp"}), "bucket", "full_outer"
-    )
-    bad = joined.filter(
-        ~(
-            F.col("s_cnt").eqNullSafe(F.col("t_cnt"))
-            & F.col("s_fp").eqNullSafe(F.col("t_fp"))
-        )
-    ).select("bucket", "s_cnt")
-    if throttle is None:
-        from sslr_spark.throttle import Throttle
+        bad = joined.filter(
+            ~(
+                F.col("s_cnt").eqNullSafe(F.col("t_cnt"))
+                & F.col("s_fp").eqNullSafe(F.col("t_fp"))
+            )
+        ).select("bucket", "s_cnt")
+        if throttle is None:
+            from sslr_spark.throttle import Throttle
 
-        throttle = Throttle(100)
-    with throttle:  # fingerprint scan reads the source key columns
-        bad_rows = bad.collect()
-    if not bad_rows:
-        return DeleteSyncStats(n_buckets, 0, 0)
-
-    nonempty = [int(r.bucket) for r in bad_rows if r.s_cnt]
-    empty = [int(r.bucket) for r in bad_rows if not r.s_cnt]
-    if nonempty:
-        repl = with_bucket(src, pk_cols, n_buckets, bmode).filter(
-            F.col(BUCKET_COL).isin(nonempty)
-        )
-        target.replace_partitions(table, repl, BUCKET_COL, sort_cols=pk_cols)
-    if empty:
-        target.drop_partitions(table, BUCKET_COL, empty)
-    return DeleteSyncStats(n_buckets, len(bad_rows), len(bad_rows))
+            throttle = Throttle(100)
+        with throttle:  # fingerprint scan reads the source key columns
+            bad_rows = bad.collect()
+        if affected or bad_rows:
+            rewrite_buckets(
+                target, table, tgt, upd, affected, pk_cols, n_buckets, bmode,
+                source=src_b,
+                repaired=[int(r.bucket) for r in bad_rows],
+                emptied=[int(r.bucket) for r in bad_rows if not r.s_cnt],
+            )
+        return DeleteSyncStats(n_buckets, len(bad_rows), len(bad_rows))
+    finally:
+        if upd is not None:
+            upd.unpersist()
 
 
 def sync_deletes(

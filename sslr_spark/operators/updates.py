@@ -17,7 +17,11 @@ partitioned, filter-pushed read; the merge apply is one shuffle on the
 primary key; the watermark commits once per applied batch, after the
 data commit. Optional version batching bounds sink-transaction size
 while keeping batch boundaries on version boundaries — which *is* the
-T2 rule (a version is never split across commits).
+T2 rule (a version is never split across commits). On a
+bucket-partitioned copy-on-write target with delete sync on, the last
+batch's write also carries the delete repair, decided beforehand from
+the virtual post-merge fingerprint (deletes.sync_deletes_partitioned),
+so a pass rewrites each bucket at most once.
 
 Scale notes (100 TB): the anti-join shuffles on the PK — with a
 bucketed / Delta target this becomes a partition-pruned MERGE; the
@@ -243,9 +247,73 @@ def merge_upsert_partitioned(
     equivalent of MERGE INTO with file pruning. Cost ∝ touched
     buckets, not table size.
 
-    Scattered-update guard: when the batch touches more than
+    This is the merge alone. A copy-on-write sync pass with delete sync
+    on writes its LAST batch through
+    deletes.sync_deletes_partitioned(updates=...) instead, which decides
+    the repair before writing and applies merge and repair in one
+    :func:`rewrite_buckets` call — the body this function shares — so
+    no bucket is rewritten twice in a pass."""
+    from sslr_spark.operators.deletes import stored_bucket_hash, with_bucket
+
+    # bucket assignment must match the STORED layout's hash mode —
+    # mixing modes scatters a key's new row into a different partition
+    # than its old row (same failure as mixing bucket counts)
+    bmode = stored_bucket_hash(target, table)
+    # The slice feeds 3-4 consumers (affected-bucket probe, key set,
+    # write union); without a persist each one re-reads and re-filters
+    # the source (measured ~0.4 s/scan at sf0.1 — half the merge time
+    # for a scattered batch).
+    upd = with_bucket(updates, pk_cols, n_buckets, bmode).persist()
+    try:
+        affected = bucket_ids(upd)
+        if not affected:
+            return
+        rewrite_buckets(
+            target, table, target.read(table, with_meta=True), upd,
+            affected, pk_cols, n_buckets, bmode,
+            full_rewrite_fraction=full_rewrite_fraction,
+            broadcast_key_bytes=broadcast_key_bytes,
+            aligned_rewrite_bytes=aligned_rewrite_bytes,
+        )
+    finally:
+        upd.unpersist()
+
+
+def bucket_ids(df: DataFrame) -> list[int]:
+    """Distinct stored-bucket ids of a frame carrying the bucket column
+    (bounded collect: at most n_buckets values)."""
+    from sslr_spark.operators.deletes import BUCKET_COL
+
+    return sorted(int(r[0]) for r in df.select(BUCKET_COL).distinct().collect())
+
+
+def rewrite_buckets(
+    target: ParquetDatabase,
+    table: str,
+    tgt: DataFrame,
+    upd: DataFrame | None,
+    affected: list[int],
+    pk_cols: list[str],
+    n_buckets: int,
+    bmode: str,
+    source: DataFrame | None = None,
+    repaired: list[int] = (),
+    emptied: list[int] = (),
+    full_rewrite_fraction: float = 0.5,
+    broadcast_key_bytes: int = 64 << 20,
+    aligned_rewrite_bytes: int = 2 << 30,
+) -> None:
+    """One write of a bucket-partitioned table: the ``affected``
+    buckets take the merge of the batch ``upd`` (target rows of
+    ``tgt`` whose keys the batch does not carry, plus the batch rows);
+    the ``repaired`` buckets take the ``source`` rows instead, and the
+    ``emptied`` ones among them (no source rows) end empty. ``tgt``,
+    ``upd`` and ``source`` carry the bucket column of the stored layout
+    (``bmode``); ``tgt`` is a with-meta read of the table.
+
+    Scattered-write guard: when the write touches more than
     ``full_rewrite_fraction`` of the buckets, pruning buys nothing —
-    the merge would rewrite most of the table anyway, plus pay the
+    the write would replace most of the table anyway, plus pay the
     dynamic-overwrite bookkeeping per partition. That case rewrites
     the whole table instead, and HOW is size-gated: tables over
     ``aligned_rewrite_bytes`` whose key set fits under
@@ -259,46 +327,47 @@ def merge_upsert_partitioned(
     CDC batches clustered on key ranges (measured sublinear at the
     100x probe); the guard keeps the pathological scattered-keys
     case near full-copy cost."""
-    from sslr_spark.operators.deletes import (
-        BUCKET_COL,
-        stored_bucket_hash,
-        with_bucket,
-    )
+    from sslr_spark.operators.deletes import BUCKET_COL, with_bucket
 
-    # bucket assignment must match the STORED layout's hash mode —
-    # mixing modes scatters a key's new row into a different partition
-    # than its old row (same failure as mixing bucket counts)
-    bmode = stored_bucket_hash(target, table)
-    # The slice feeds 3-4 consumers (affected-bucket probe, key set,
-    # write union); without a persist each one re-reads and re-filters
-    # the source (measured ~0.4 s/scan at sf0.1 — half the merge time
-    # for a scattered batch).
-    upd = with_bucket(updates, pk_cols, n_buckets, bmode).persist()
-    try:
-        affected = [
-            int(r[0]) for r in upd.select(BUCKET_COL).distinct().collect()
-        ]
-        if not affected:
-            return
-        tgt = target.read(table, with_meta=True)
-        keys = upd.select(*pk_cols).distinct()
-        if len(affected) > full_rewrite_fraction * n_buckets:
-            # Gate the FORCED broadcast on estimated bytes, not row
-            # count: a 1M-key set of ~1KB composite string PKs is a
-            # gigabyte — row count alone would wave it through and
-            # OOM the driver. Width is sampled from the persisted
-            # slice (bounded collect). The big-table check is pure
-            # metadata — it goes FIRST, so a small table (the common
-            # case, which always takes the clustered rewrite) never
-            # pays the key-count and width-sample driver jobs that
-            # only the aligned path's byte gate consumes (r11,
-            # guide §1.2 — don't compute things you throw away).
-            big_table = (
-                hasattr(target, "table_bytes")
-                and target.table_bytes(table) >= aligned_rewrite_bytes
-            )
-            key_bytes = None
-            if big_table and hasattr(target, "overwrite_partitioned_aligned"):
+    bad = sorted(set(repaired))
+    merged = sorted(set(affected) - set(bad))
+    keys = upd.select(*pk_cols).distinct() if upd is not None else None
+    # rows written besides the target's kept rows: the batch outside
+    # the repaired buckets, the source inside them
+    fresh_df = None
+    if upd is not None:
+        fresh_df = upd.filter(~F.col(BUCKET_COL).isin(bad)) if bad else upd
+        fresh_df = fresh_df.select(*tgt.columns)
+    if len(bad) > len(emptied):
+        repl = source.filter(F.col(BUCKET_COL).isin(bad)).select(*tgt.columns)
+        fresh_df = repl if fresh_df is None else fresh_df.unionByName(repl)
+
+    def anti(df: DataFrame, broadcast: bool = False) -> DataFrame:
+        if keys is None:
+            return df
+        return df.join(F.broadcast(keys) if broadcast else keys, pk_cols, "left_anti")
+
+    touched = len(merged) + len(bad) - len(set(emptied))
+    if touched > full_rewrite_fraction * n_buckets:
+        rest = tgt.filter(~F.col(BUCKET_COL).isin(bad)) if bad else tgt
+        # Gate the FORCED broadcast on estimated bytes, not row
+        # count: a 1M-key set of ~1KB composite string PKs is a
+        # gigabyte — row count alone would wave it through and
+        # OOM the driver. Width is sampled from the persisted
+        # slice (bounded collect). The big-table check is pure
+        # metadata — it goes FIRST, so a small table (the common
+        # case, which always takes the clustered rewrite) never
+        # pays the key-count and width-sample driver jobs that
+        # only the aligned path's byte gate consumes (r11,
+        # guide §1.2 — don't compute things you throw away).
+        big_table = (
+            hasattr(target, "table_bytes")
+            and target.table_bytes(table) >= aligned_rewrite_bytes
+        )
+        key_bytes = None
+        if big_table and hasattr(target, "overwrite_partitioned_aligned"):
+            key_bytes = 0
+            if keys is not None:
                 n_keys = keys.count()  # cheap: slice is persisted
                 sample = keys.limit(100).collect()
                 row_bytes = max(  # conservative: max sampled width
@@ -306,59 +375,59 @@ def merge_upsert_partitioned(
                     default=16,
                 )
                 key_bytes = n_keys * row_bytes
-            if (
-                key_bytes is not None
-                and key_bytes <= broadcast_key_bytes
-            ):
-                # Shuffle-avoiding path for BIG tables: a BROADCAST
-                # anti-join is narrow, so the kept rows retain the
-                # bucket alignment of the partitioned-dir read and
-                # the rewrite needs no full-table shuffle — at
-                # cluster scale, moving the whole table over the
-                # network is the dominant cost. Alignment is the
-                # correctness condition — a shuffled anti-join would
-                # scatter buckets across tasks and explode the file
-                # count — hence the hard broadcast. Below the byte
-                # threshold the one-shot clustered rewrite wins
-                # instead (interleaved A/B at sf0.1: 1.4-2.9 s vs
-                # 1.9-4.2 s — local shuffles are memory-speed, so the
-                # aligned path's second write job costs more than the
-                # shuffle it saves).
-                kept = tgt.join(
-                    F.broadcast(keys), on=pk_cols, how="left_anti"
-                )
-                target.overwrite_partitioned_aligned(
-                    table, kept, upd.select(*kept.columns), BUCKET_COL,
-                    n_buckets=n_buckets, bucket_hash=bmode,
-                )
-                return
-            # Giant scattered batch (keys too big to broadcast): pay
-            # the shuffled anti-join + one clean clustered rewrite.
-            kept = tgt.drop(BUCKET_COL).join(keys, on=pk_cols, how="left_anti")
-            out = kept.unionByName(upd.drop(BUCKET_COL).select(*kept.columns))
-            sp = int(
-                target.spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            target.overwrite_partitioned(
-                table, with_bucket(out, pk_cols, n_buckets, bmode), BUCKET_COL,
-                n_buckets=n_buckets,
-                files_per_bucket=max(1, sp // n_buckets),
-                bucket_hash=bmode,
-                sort_cols=pk_cols,
+        if key_bytes is not None and key_bytes <= broadcast_key_bytes:
+            # Shuffle-avoiding path for BIG tables: a BROADCAST
+            # anti-join is narrow, so the kept rows retain the
+            # bucket alignment of the partitioned-dir read and
+            # the rewrite needs no full-table shuffle — at
+            # cluster scale, moving the whole table over the
+            # network is the dominant cost. Alignment is the
+            # correctness condition — a shuffled anti-join would
+            # scatter buckets across tasks and explode the file
+            # count — hence the hard broadcast. Below the byte
+            # threshold the one-shot clustered rewrite wins
+            # instead (interleaved A/B at sf0.1: 1.4-2.9 s vs
+            # 1.9-4.2 s — local shuffles are memory-speed, so the
+            # aligned path's second write job costs more than the
+            # shuffle it saves).
+            kept = anti(rest, broadcast=True)
+            extra = fresh_df if fresh_df is not None else kept.limit(0)
+            target.overwrite_partitioned_aligned(
+                table, kept, extra.select(*kept.columns), BUCKET_COL,
+                n_buckets=n_buckets, bucket_hash=bmode,
             )
             return
-        kept = (
-            tgt.filter(F.col(BUCKET_COL).isin(affected))  # partition pruning
-            .drop(BUCKET_COL)
-            .join(keys, on=pk_cols, how="left_anti")
+        # Giant scattered batch (keys too big to broadcast): pay
+        # the shuffled anti-join + one clean clustered rewrite.
+        out = anti(rest.drop(BUCKET_COL))
+        if fresh_df is not None:
+            out = out.unionByName(fresh_df.drop(BUCKET_COL))
+        sp = int(target.spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        target.overwrite_partitioned(
+            table, with_bucket(out, pk_cols, n_buckets, bmode), BUCKET_COL,
+            n_buckets=n_buckets,
+            files_per_bucket=max(1, sp // n_buckets),
+            bucket_hash=bmode,
+            sort_cols=pk_cols,
         )
-        out = kept.unionByName(upd.drop(BUCKET_COL).select(*kept.columns))
+        return
+    out = None
+    if merged:
+        out = anti(
+            tgt.filter(F.col(BUCKET_COL).isin(merged))  # partition pruning
+            .drop(BUCKET_COL)
+        )
+    if fresh_df is not None:
+        rows = fresh_df.drop(BUCKET_COL)
+        out = rows if out is None else out.unionByName(rows)
+    if out is not None:
         target.replace_partitions(
             table, with_bucket(out, pk_cols, n_buckets, bmode), BUCKET_COL,
             sort_cols=pk_cols,
         )
-    finally:
-        upd.unpersist()
+    if emptied:
+        # dynamic overwrite cannot express an empty partition
+        target.drop_partitions(table, BUCKET_COL, list(emptied))
 
 
 def plan_version_batches(
@@ -421,6 +490,7 @@ def sync_updates(
     merge_on_read: bool = False,
     max_log_fraction: float = 0.1,
     max_log_bytes: int | None = None,
+    repairs: list | None = None,
 ) -> int:
     """Run the update phase for one table; returns rows written.
 
@@ -435,6 +505,19 @@ def sync_updates(
     mirroring the reference's bounded chunk transactions. With
     ``n_buckets`` set, the target is maintained bucket-partitioned and
     merges rewrite only touched partitions (the scale path).
+
+    ``repairs``: a list asks for delete sync in the same pass. On an
+    incremental pass against a bucket-partitioned copy-on-write target
+    the delete repair is decided BEFORE the last batch writes and rides
+    in that batch's single write (deletes.sync_deletes_partitioned with
+    ``updates``: the virtual post-merge diff), so each bucket is
+    rewritten at most once per pass; earlier batches merge and commit
+    alone. An empty slice runs the repair alone. The repair's
+    DeleteSyncStats is appended to the list, and the state commit
+    follows the write as usual. Any other pass (full copy, merge-on-
+    read, unpartitioned or in-place target) leaves the list empty: the
+    caller still owes the delete phase. An idle pass (no new versions,
+    where clause unchanged) writes no state.
 
     ``strip_version`` drops the version column from written payloads —
     JDBC targets never store the source's transaction id, exactly as
@@ -565,19 +648,31 @@ def sync_updates(
     from sslr_spark.operators.deletes import effective_buckets
 
     n_buckets = effective_buckets(target, table, n_buckets)
+    fused = repairs is not None and bool(n_buckets) and not merge_on_read
+
+    def repair(updates: DataFrame | None = None) -> None:
+        from sslr_spark.operators.deletes import sync_deletes_partitioned
+
+        repairs.append(sync_deletes_partitioned(
+            source_df, target, table, pk_cols, n_buckets,
+            where=where, throttle=throttle, hash_mode=bucket_hash,
+            updates=updates,
+        ))
 
     slice_df = filtered_source(source_df, where).filter(
         F.col(version_col) >= F.lit(rng.start_version)
     )
 
-    if rows_per_batch:
+    if rng.end_version < rng.start_version:
+        batches = []  # the probe already saw no new version
+    elif rows_per_batch:
         with throttle:  # per-version counts scan the source slice
             batches = plan_version_batches(slice_df, version_col, rows_per_batch)
     else:
-        batches = [(rng.start_version, rng.end_version)] if rng.end_version >= rng.start_version else []
+        batches = [(rng.start_version, rng.end_version)]
 
     total = 0
-    for lo, hi in batches:
+    for i, (lo, hi) in enumerate(batches):
         batch = slice_df.filter(
             (F.col(version_col) >= F.lit(lo)) & (F.col(version_col) <= F.lit(hi))
         )
@@ -594,7 +689,9 @@ def sync_updates(
         try:
             with throttle:  # the count scans the source slice
                 n = updates.count()
-            if n:
+            if fused and i == len(batches) - 1:
+                repair(updates if n else None)
+            elif n:
                 if merge_on_read:
                     append_upsert_log(
                         target, table, updates, pk_cols, version_col
@@ -608,18 +705,25 @@ def sync_updates(
                 else:
                     merged = merge_upsert(target.read(table), updates, pk_cols)
                     target.overwrite(table, merged)
-                total += n
+            total += n
         finally:
             updates.unpersist()
         # watermark advances to the end of the fully applied batch (T2)
         state_store.set(TableState(table, hi, where or ""))
     if not batches:
+        if fused:
+            repair()
         # Empty slice: never move the watermark backwards — a drained
         # source reports max(version) = None => end_version 0, and
         # rewinding would force a spurious full copy next pass (the
-        # delete phase already reconciles removals).
+        # delete phase already reconciles removals). An unchanged
+        # state is not rewritten: there is no data commit to order
+        # it after.
         new_mark = max(state.last_seen_version, rng.end_version)
-        state_store.set(TableState(table, new_mark, where or ""))
+        if (new_mark, where or "") != (
+            state.last_seen_version, state.where_clause
+        ):
+            state_store.set(TableState(table, new_mark, where or ""))
     if merge_on_read and should_compact_upsert_log(
         target, table, max_log_fraction, max_log_bytes=max_log_bytes
     ):
@@ -912,10 +1016,7 @@ def compact_upsert_log(
         )
         log_b = with_bucket(log, pk_cols, stored_buckets, bmode).persist()
         try:
-            affected = sorted(
-                int(r[0])
-                for r in log_b.select(BUCKET_COL).distinct().collect()
-            )  # bounded: <= stored_buckets values
+            affected = bucket_ids(log_b)
             if not affected:
                 target.drop(log_t)
                 return {"folded_rows": folded}

@@ -34,6 +34,17 @@ def test_unknown_top_level_key_rejected():
         load_config('{"source": "/s", "target": "/t", "sourceTables": ["a"], "bogus": 1}')
 
 
+def test_merge_on_read_keys_load():
+    cfg = load_config(
+        '{"source": "/s", "target": "/t", "sourceTables": ["a"],'
+        ' "mergeOnRead": true, "mergeOnReadMaxLog": 0.25,'
+        ' "mergeOnReadMaxLogBytes": 1048576}'
+    )
+    assert cfg.merge_on_read is True
+    assert cfg.merge_on_read_max_log == 0.25
+    assert cfg.merge_on_read_max_log_bytes == 1048576
+
+
 def test_unknown_filtered_key_rejected():
     with pytest.raises(ConfigError, match="unknown key"):
         load_config(
