@@ -229,7 +229,7 @@ def main(only: set[str] | None = None) -> dict:
         store.set(TableState("lineitem", 100, ""))
     # JIT warm-up (outside the timer): run the same merge path against
     # a 1k-row throwaway table so whole-stage codegen for the
-    # window/anti-join/dynamic-overwrite operators is compiled before
+    # window/anti-join/partition-write operators is compiled before
     # the measurement — first-run compilation was adding a
     # non-representative ~3-6 s to whichever section hit it first.
     if want(
@@ -931,110 +931,7 @@ def main(only: set[str] | None = None) -> dict:
         "aux": aux,
         "reps": REPS,
         "sf": SF_DIR,
-        "notes": SECTION_NOTES,
     }
-
-
-# Per-section adjudications carried in the bench record (VERDICT r8
-# item 4: regressions must be attributed, not shrugged at). Keys are
-# section names; values are one-line findings with the evidence.
-SECTION_NOTES = {
-    "ivfpq_residual": (
-        "r10 attribution (VERDICT r9 item 2 — the one section >2x "
-        "without its own snapshot figure): byte-level comparison of "
-        "every function on the path (ivfpq_topk_residual/_serve, "
-        "ivf_index_fixed, pq_encode_with_books, _codebooks_from_ids, "
-        "_topk_per_query_salted, the q_ wrapper and its constants) "
-        "shows r8 -> r10 IDENTICAL; same-box --only snapshot runs: "
-        "r8 code min 4.85-5.73 s across 4 trials, r9-head code "
-        "4.57-5.54 s across 3 — and the decisive SAME-SparkSession "
-        "interleaved A/B (old and new queries_ext loaded side by "
-        "side, alternating reps in one JVM) reads old 6.07 s min vs "
-        "new 5.82 s min with both swinging 6-22 s rep-to-rep on "
-        "identical code. The r9 10.98 s (and its 8.97 s 'clean' "
-        "rerun) are noisy-box samples of a ~4.5-5.5 s section; no "
-        "code regression exists."
-    ),
-    "incr_update": (
-        "r10 full-pass 8.87 s vs r9 3.57 s attributed ENVIRONMENT: "
-        "isolated same-box --only trials read r10 5.28 s (min 3.79) "
-        "vs r9-HEAD CODE 5.09 s (min 4.57) — old code equal-or-worse "
-        "on today's box; nothing on the path changed in r10. "
-        "full_copy (1.55x) and agg_probe (3.55x, 0.4 s absolute) "
-        "likewise read 1.17/0.16 s isolated — exactly their r9 "
-        "records; full-pass contention, not code."
-    ),
-    "mor_append_read": (
-        "r10 attribution + fix (VERDICT r9 item 4): same-box --only "
-        "trials — r8 snapshot 1.25 s min (its recorded 0.80 was a "
-        "quieter window), r9 head 1.67 s (+0.42: the broadcast "
-        "byte-gate's width sample collected from the POST-collapse "
-        "log, dragging the latest-version window's shuffle into "
-        "every read), r10 1.41 s after sampling the RAW log instead "
-        "(updates.py read_merged — key width is identical, zero "
-        "extra shuffle). Remaining +0.16 vs r8 code = the footer "
-        "row-count probe + bounded 100-key collect + copy-pending "
-        "marker check the r9 features legitimately added per read. "
-        "Confirmed by the closing full pass: 0.896 s min — back in "
-        "r8's 0.80 s class on a full-pass warm JVM."
-    ),
-    # round-9c (continuation-2) environment attribution: the final
-    # full pass measured pq_build/pq_query/winnow_spans/quality_gate/
-    # ivfpq_residual/shuffle_order 1.7-2.9x over the earlier r9
-    # records. Same-machine prior-snapshot rerun (the README round-4
-    # method; git worktree of the pre-session commit, --only, idle
-    # box): the OLD code measures equal or WORSE on this box
-    # (winnow_spans 6.19 s old vs 1.03 s final, pq_query 2.26 vs
-    # 1.35, quality_gate 4.96 vs 2.52, pq_build 0.84 vs 0.91) — none
-    # of these paths changed this session, and the final code is not
-    # slower than the snapshot on identical hardware. Environment,
-    # not code; the r9 records were simply taken on a faster/quieter
-    # instance of the box.
-    # round-9c first recordings
-    "image_phash": (
-        "3.9 s at sf0.1 = synth+decode+band-join over 5k images; pair "
-        "OUTPUT is quadratic in duplicate-cluster size (K=10 probe: "
-        "~5M true pairs from the aliased pattern space in ~8 s) — "
-        "dup-heavy corpora should collapse via star clustering "
-        "instead of materializing pairs. CLOSED in r10: "
-        "image_phash_clusters (its own section) collapses identical "
-        "hashes to hub nodes BEFORE any pair forms — output linear; "
-        "probe: 10x data grew the pair list 63x but cluster rows "
-        "exactly 10x"
-    ),
-    "pagerank": (
-        "3 fixed iterations over the host graph; each iteration adds "
-        "one join+agg to the plan — deep iteration counts should pass "
-        "checkpoint_every to truncate lineage"
-    ),
-    # r8 clean reruns flagged these three >1.25x vs the r7 full-pass
-    # minima. Attribution (r9): ENVIRONMENT, two mechanisms, both
-    # measured on identical code. (1) fresh-JVM bias: --only reruns
-    # started a cold JVM whose first jobs pay JIT/codegen warm-up,
-    # then got compared against WARM full-pass minima — bench.py now
-    # runs an untimed warm-up before any section. (2) host noise:
-    # back-to-back isolated runs of text_gopher_flags (code untouched
-    # since r7, pure codegen expressions) measured 2.20 / 0.91 / 0.60
-    # s minutes apart on an idle-load box; incremental_dedup 1.52 /
-    # 1.58 / 2.20; delete_diff_partitioned 2.60 / 1.82 / 2.22. The
-    # same code in a quiet warm full pass: 0.353 / 0.867 / 1.429 —
-    # at or below the r7 minima (0.42 / 1.04 / 1.43), so no section
-    # carries a code regression.
-    "incremental_dedup": (
-        "r8 drift = environment (fresh-JVM bias + host noise): quiet "
-        "warm full pass 0.867 s vs r7 min 1.04 s on identical code"
-    ),
-    "text_gopher_flags": (
-        "r8 drift = environment: code untouched since r7; isolated "
-        "runs swing 0.60-2.20 s on an idle box (0.69-0.76 s tight "
-        "after the warm-up fix); quiet warm full pass 0.353 s vs r7 "
-        "min 0.42 s"
-    ),
-    "delete_diff_partitioned": (
-        "r8 drift = environment: quiet warm full pass 1.429 s vs r7 "
-        "min 1.43 s on identical code; isolated runs swing 1.8-2.6 s"
-    ),
-}
 
 
 def _previous_round_mins() -> tuple[dict[str, float], str]:

@@ -211,8 +211,10 @@ class Job:
         explicitly passed ``throttle`` is used for both phases
         (tests / callers that want a shared budget).
 
-        Update phase, then delete phase — except on an incremental pass
-        against a bucket-partitioned copy-on-write target, where
+        Update phase, then delete phase — except after a full copy
+        (whatever its cause; the table is listed in ``full_copies``),
+        and on an incremental pass against a bucket-partitioned
+        copy-on-write target, where
         sync_updates decides the delete repair from the virtual
         post-merge diff before writing and applies merge and repair in
         ONE write of the last batch (each bucket rewritten at most once
@@ -237,8 +239,7 @@ class Job:
                 )
             self._maintenance(table, result)
             return
-        repairs: list = []
-        rows = sync_updates(
+        done = sync_updates(
             src,
             self.target,
             self.state,
@@ -263,26 +264,22 @@ class Job:
             merge_on_read=self.config.merge_on_read,
             max_log_fraction=self.config.merge_on_read_max_log,
             max_log_bytes=self.config.merge_on_read_max_log_bytes,
-            repairs=repairs if self.config.sync_deletes else None,
+            sync_deletes=self.config.sync_deletes,
         )
-        result.updated_rows += rows
-        versionless = self.config.version_column not in src.columns
-        if table in self.force_full or versionless:
+        result.updated_rows += done.rows
+        if done.full_copy:
             # Full copy just ran — the target IS the source snapshot,
             # so delete sync is skipped this pass (reference
             # internal/job.go:261-271 returns before SyncDeletes).
-            # Version-less sources (file drops) full-copy EVERY pass
-            # (get_update_range degrade), so the same reasoning skips
-            # their delete phase every pass — without this, a
-            # continuous jsonl: sync would pay two full key scans plus
-            # bucket fingerprints per pass for nothing.
+            # That holds for every full-copy cause: forced, lost
+            # state, a pending interrupted copy, a stale target, and
+            # version-less sources (file drops), which full-copy
+            # every pass.
             result.full_copies.append(table)
             self.force_full.discard(table)
-        elif repairs:
+        elif done.repair is not None:
             # the delete repair rode in the update phase's write
-            result.repaired_buckets += sum(
-                r.mismatched_buckets for r in repairs
-            )
+            result.repaired_buckets += done.repair.mismatched_buckets
         elif self.config.sync_deletes:
             self._sync_deletes_phase(
                 table, src, pks, where, n_buckets, result,

@@ -265,12 +265,14 @@ def sync_deletes_partitioned(
     merged table's key multiset is the target's plus the batch keys the
     target lacks (one anti-join of the batch keys against the pruned
     key columns of the touched buckets). Its fingerprint equals the one
-    a diff after the merge would see, so the repair set is the same — on a target holding duplicate key rows it can only be
-    larger, never smaller. Then ONE write (updates.rewrite_buckets):
-    repaired buckets take the source's rows, the other touched buckets
-    take the merge, emptied buckets are dropped. The diff, the new-key
-    probe and the merge's kept rows share one target read, so the
-    table is listed once. Without ``updates`` this is the repair alone.
+    a diff after the merge would see, so the repair set is the same —
+    on a target holding duplicate key rows it can only be larger, never
+    smaller. Then ONE write (updates.rewrite_buckets): repaired buckets
+    take the source's rows (a bucket the source no longer holds is
+    removed), the other touched buckets take the merge. The diff, the
+    new-key probe and the merge's kept rows share one target read, so
+    the table is listed once. Without ``updates`` this is the repair
+    alone.
 
     Crash contract: same as the merge — the caller commits state after
     this returns, and a replay recomputes the diff over whatever mix of
@@ -312,7 +314,7 @@ def sync_deletes_partitioned(
                 F.col("s_cnt").eqNullSafe(F.col("t_cnt"))
                 & F.col("s_fp").eqNullSafe(F.col("t_fp"))
             )
-        ).select("bucket", "s_cnt")
+        ).select("bucket")
         if throttle is None:
             from sslr_spark.throttle import Throttle
 
@@ -324,7 +326,6 @@ def sync_deletes_partitioned(
                 target, table, tgt, upd, affected, pk_cols, n_buckets, bmode,
                 source=src_b,
                 repaired=[int(r.bucket) for r in bad_rows],
-                emptied=[int(r.bucket) for r in bad_rows if not r.s_cnt],
             )
         return DeleteSyncStats(n_buckets, len(bad_rows), len(bad_rows))
     finally:

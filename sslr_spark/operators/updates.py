@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import logging
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -42,6 +43,9 @@ from pyspark.sql import functions as F
 from sslr_spark.operators.copy import copy_full_table, filtered_source
 from sslr_spark.sources.parquet import ParquetDatabase
 from sslr_spark.state import StateStore, TableState
+
+if TYPE_CHECKING:
+    from sslr_spark.operators.deletes import DeleteSyncStats
 
 
 @dataclass
@@ -57,6 +61,18 @@ class UpdateRange:
     start_version: int
     end_version: int
     source_rows: int | None = None
+
+
+@dataclass
+class UpdatePass:
+    """What one :func:`sync_updates` call did: the rows it wrote,
+    whether it took the full-copy branch, and the delete repair that
+    rode in its write (``deletes.DeleteSyncStats``; None when it did
+    not)."""
+
+    rows: int
+    full_copy: bool = False
+    repair: DeleteSyncStats | None = None
 
 
 def get_update_range(
@@ -243,7 +259,7 @@ def merge_upsert_partitioned(
 ) -> None:
     """Partition-pruned merge against a bucket-partitioned target:
     only the partitions containing updated keys are read (pruned scan)
-    and rewritten (dynamic partition overwrite) — the plain-parquet
+    and rewritten (``replace_partitions``) — the plain-parquet
     equivalent of MERGE INTO with file pruning. Cost ∝ touched
     buckets, not table size.
 
@@ -298,7 +314,6 @@ def rewrite_buckets(
     bmode: str,
     source: DataFrame | None = None,
     repaired: list[int] = (),
-    emptied: list[int] = (),
     full_rewrite_fraction: float = 0.5,
     broadcast_key_bytes: int = 64 << 20,
     aligned_rewrite_bytes: int = 2 << 30,
@@ -306,16 +321,17 @@ def rewrite_buckets(
     """One write of a bucket-partitioned table: the ``affected``
     buckets take the merge of the batch ``upd`` (target rows of
     ``tgt`` whose keys the batch does not carry, plus the batch rows);
-    the ``repaired`` buckets take the ``source`` rows instead, and the
-    ``emptied`` ones among them (no source rows) end empty. ``tgt``,
-    ``upd`` and ``source`` carry the bucket column of the stored layout
-    (``bmode``); ``tgt`` is a with-meta read of the table.
+    the ``repaired`` buckets take the ``source`` rows instead (a
+    repaired bucket without source rows is removed). ``tgt``, ``upd``
+    and ``source`` carry the bucket column of the stored layout
+    (``bmode``); ``tgt`` is a with-meta read of the table. Both kinds
+    of bucket are listed to one ``replace_partitions`` call.
 
     Scattered-write guard: when the write touches more than
     ``full_rewrite_fraction`` of the buckets, pruning buys nothing —
-    the write would replace most of the table anyway, plus pay the
-    dynamic-overwrite bookkeeping per partition. That case rewrites
-    the whole table instead, and HOW is size-gated: tables over
+    the write would replace most of the table anyway, plus pay one
+    swap per partition. That case rewrites the whole table instead,
+    and HOW is size-gated: tables over
     ``aligned_rewrite_bytes`` whose key set fits under
     ``broadcast_key_bytes`` (estimated from a sampled max row width)
     use the shuffle-avoiding aligned write (a broadcast
@@ -338,7 +354,7 @@ def rewrite_buckets(
     if upd is not None:
         fresh_df = upd.filter(~F.col(BUCKET_COL).isin(bad)) if bad else upd
         fresh_df = fresh_df.select(*tgt.columns)
-    if len(bad) > len(emptied):
+    if bad:
         repl = source.filter(F.col(BUCKET_COL).isin(bad)).select(*tgt.columns)
         fresh_df = repl if fresh_df is None else fresh_df.unionByName(repl)
 
@@ -347,8 +363,7 @@ def rewrite_buckets(
             return df
         return df.join(F.broadcast(keys) if broadcast else keys, pk_cols, "left_anti")
 
-    touched = len(merged) + len(bad) - len(set(emptied))
-    if touched > full_rewrite_fraction * n_buckets:
+    if len(merged) + len(bad) > full_rewrite_fraction * n_buckets:
         rest = tgt.filter(~F.col(BUCKET_COL).isin(bad)) if bad else tgt
         # Gate the FORCED broadcast on estimated bytes, not row
         # count: a 1M-key set of ~1KB composite string PKs is a
@@ -411,23 +426,16 @@ def rewrite_buckets(
             sort_cols=pk_cols,
         )
         return
-    out = None
-    if merged:
-        out = anti(
-            tgt.filter(F.col(BUCKET_COL).isin(merged))  # partition pruning
-            .drop(BUCKET_COL)
-        )
+    out = anti(
+        tgt.filter(F.col(BUCKET_COL).isin(merged))  # partition pruning
+        .drop(BUCKET_COL)
+    )
     if fresh_df is not None:
-        rows = fresh_df.drop(BUCKET_COL)
-        out = rows if out is None else out.unionByName(rows)
-    if out is not None:
-        target.replace_partitions(
-            table, with_bucket(out, pk_cols, n_buckets, bmode), BUCKET_COL,
-            sort_cols=pk_cols,
-        )
-    if emptied:
-        # dynamic overwrite cannot express an empty partition
-        target.drop_partitions(table, BUCKET_COL, list(emptied))
+        out = out.unionByName(fresh_df.drop(BUCKET_COL))
+    target.replace_partitions(
+        table, with_bucket(out, pk_cols, n_buckets, bmode), BUCKET_COL,
+        merged + bad, sort_cols=pk_cols,
+    )
 
 
 def plan_version_batches(
@@ -490,9 +498,10 @@ def sync_updates(
     merge_on_read: bool = False,
     max_log_fraction: float = 0.1,
     max_log_bytes: int | None = None,
-    repairs: list | None = None,
-) -> int:
-    """Run the update phase for one table; returns rows written.
+    sync_deletes: bool = False,
+) -> UpdatePass:
+    """Run the update phase for one table; returns an
+    :class:`UpdatePass`.
 
     ``bucket_hash`` ('portable' md5 | 'fast' xxhash64) selects the
     bucket-assignment hash for NEW partitioned layouts written by the
@@ -506,18 +515,20 @@ def sync_updates(
     ``n_buckets`` set, the target is maintained bucket-partitioned and
     merges rewrite only touched partitions (the scale path).
 
-    ``repairs``: a list asks for delete sync in the same pass. On an
+    ``sync_deletes`` asks for delete sync in the same pass. On an
     incremental pass against a bucket-partitioned copy-on-write target
     the delete repair is decided BEFORE the last batch writes and rides
     in that batch's single write (deletes.sync_deletes_partitioned with
     ``updates``: the virtual post-merge diff), so each bucket is
     rewritten at most once per pass; earlier batches merge and commit
     alone. An empty slice runs the repair alone. The repair's
-    DeleteSyncStats is appended to the list, and the state commit
-    follows the write as usual. Any other pass (full copy, merge-on-
-    read, unpartitioned or in-place target) leaves the list empty: the
-    caller still owes the delete phase. An idle pass (no new versions,
-    where clause unchanged) writes no state.
+    DeleteSyncStats is the result's ``repair``, and the state commit
+    follows the write as usual. A full copy (``full_copy``) leaves the
+    target equal to the source snapshot, so no delete phase is owed;
+    after any other incremental pass (merge-on-read, unpartitioned or
+    in-place target) ``repair`` is None and the caller still owes the
+    delete phase. An idle pass (no new versions, where clause
+    unchanged) writes no state.
 
     ``strip_version`` drops the version column from written payloads —
     JDBC targets never store the source's transaction id, exactly as
@@ -640,7 +651,7 @@ def sync_updates(
                     expected_rows=rng.source_rows,
                 )
         state_store.set(TableState(table, rng.end_version, where or ""))
-        return rows
+        return UpdatePass(rows, full_copy=True)
 
     # Incremental path: honor the STORED layout — an existing
     # unpartitioned table merges unpartitioned even if config asks for
@@ -648,16 +659,17 @@ def sync_updates(
     from sslr_spark.operators.deletes import effective_buckets
 
     n_buckets = effective_buckets(target, table, n_buckets)
-    fused = repairs is not None and bool(n_buckets) and not merge_on_read
+    fused = sync_deletes and bool(n_buckets) and not merge_on_read
+    repaired = None
 
-    def repair(updates: DataFrame | None = None) -> None:
+    def repair(updates: DataFrame | None = None):
         from sslr_spark.operators.deletes import sync_deletes_partitioned
 
-        repairs.append(sync_deletes_partitioned(
+        return sync_deletes_partitioned(
             source_df, target, table, pk_cols, n_buckets,
             where=where, throttle=throttle, hash_mode=bucket_hash,
             updates=updates,
-        ))
+        )
 
     slice_df = filtered_source(source_df, where).filter(
         F.col(version_col) >= F.lit(rng.start_version)
@@ -690,7 +702,7 @@ def sync_updates(
             with throttle:  # the count scans the source slice
                 n = updates.count()
             if fused and i == len(batches) - 1:
-                repair(updates if n else None)
+                repaired = repair(updates if n else None)
             elif n:
                 if merge_on_read:
                     append_upsert_log(
@@ -712,7 +724,7 @@ def sync_updates(
         state_store.set(TableState(table, hi, where or ""))
     if not batches:
         if fused:
-            repair()
+            repaired = repair()
         # Empty slice: never move the watermark backwards — a drained
         # source reports max(version) = None => end_version 0, and
         # rewinding would force a spurious full copy next pass (the
@@ -733,7 +745,7 @@ def sync_updates(
             target, table, pk_cols, version_col,
             n_buckets=n_buckets, bucket_hash=bucket_hash,
         )
-    return total
+    return UpdatePass(total, repair=repaired)
 
 
 # ------------------------------------------------------------------
@@ -767,14 +779,16 @@ def append_upsert_log(
     version_col: str = "xmin",
 ) -> None:
     """MOR write path: land a CDC batch as a log APPEND — no base
-    read, no bucket rewrite, cost = the batch itself. The batch is
-    pre-collapsed to latest-version-per-key (bounded, map-side
-    max_by) so replaying one log file never carries intra-batch
-    stale rows; ACROSS batches the read/compaction overlay resolves
-    versions (versions must be distinct per key across upsert and
-    delete batches — CDC transaction ids are). Columns align to the
-    base table's schema so the overlay union never reorders fields;
-    every log row carries the tombstone marker (False here)."""
+    read, no bucket rewrite, cost = the batch itself. Precondition:
+    ``updates`` holds one row per ``pk_cols`` key (dedup_latest_version
+    over ``version_col`` applied, or a key-unique source read), so one
+    log file never carries
+    intra-batch stale rows; ACROSS batches the read/compaction
+    overlay resolves versions (versions must be distinct per key
+    across upsert and delete batches — CDC transaction ids are).
+    Columns align to the base table's schema so the overlay union
+    never reorders fields; every log row carries the tombstone marker
+    (False here)."""
     base_schema = target.read(table).schema
     base_cols = [f.name for f in base_schema]
     missing = [c for c in base_cols if c not in updates.columns]
@@ -803,10 +817,9 @@ def append_upsert_log(
             f"fails nondeterministically at read; cast the batch "
             f"first: {mismatched}"
         )
-    batch = dedup_latest_version(updates, pk_cols, version_col)
     target.append(
         upsert_log_table(table),
-        batch.select(*base_cols).withColumn(TOMBSTONE_COL, F.lit(False)),
+        updates.select(*base_cols).withColumn(TOMBSTONE_COL, F.lit(False)),
     )
 
 
@@ -968,27 +981,33 @@ def compact_upsert_log(
 ) -> dict:
     """Fold the log into the base and truncate it.
 
-    Layout-aware cost (round 9): when the base is STORED
-    bucket-partitioned, compaction rewrites ONLY the partitions that
-    contain log keys (dynamic partition overwrite) — cost ∝ overlay
-    debt, not base size. At 100 TB with a 10%-row log clustered on
-    recent keys, this folds a handful of buckets instead of moving
-    the whole table through a write. Unpartitioned bases keep the
-    whole-table staged-rename swap (with ``n_buckets`` set that swap
-    doubles as the migration INTO the bucketed layout).
+    Layout-aware cost: when the base is STORED bucket-partitioned,
+    compaction rewrites ONLY the partitions that contain log keys (one
+    ``replace_partitions`` over them; a bucket the log's tombstones
+    empty is removed) — cost ∝ overlay debt, not base size. At 100 TB
+    with a 10%-row log clustered on recent keys, this folds a handful
+    of buckets instead of moving the whole table through a write.
+    Unpartitioned bases keep the whole-table staged-rename swap (with
+    ``n_buckets`` set that swap doubles as the migration INTO the
+    bucketed layout).
 
-    Crash contract, whole-table path: the overwrite is the atomic
+    Crash contract: the log is dropped only after the base write
+    returns. Whole-table path: the overwrite is the atomic
     staged-rename swap; a crash BEFORE the swap leaves the old base +
     intact log (nothing lost), a crash AFTER the swap but before the
     log drop leaves the new base + a stale log whose rows re-apply as
     no-ops (log supersedes base at equal versions with the identical
     payload — idempotent by the read path's overlay rule). Bucketed
-    path: dynamic partition overwrite is not atomic ACROSS
-    partitions, but any partition mix a crash leaves is the same
-    idempotent re-apply — the log is still intact, each bucket's
-    rewrite is a pure function of (base bucket, log), and replaying
-    it converges (same argument as the repair paths,
-    tests/test_mor.py crash cases).
+    path: each bucket swaps in by rename with rollback, atomic per
+    bucket but not across them; any mix of folded and unfolded
+    buckets a crash leaves is the same idempotent re-apply — the log
+    is still intact, each bucket's rewrite is a pure function of (base
+    bucket, log), and replaying it converges
+    (tests/test_crash_recovery.py). A hard kill between the two
+    renames of one bucket parks its base files in a ``.old-``
+    directory; the next Job pass with delete sync on finds the
+    bucket's keys missing from the overlay and appends them back from
+    the source.
 
     Returns {"folded_rows": n} (0 = no log)."""
     log_t = upsert_log_table(table)
@@ -1006,7 +1025,8 @@ def compact_upsert_log(
         from sslr_spark.operators.deletes import BUCKET_COL, with_bucket
 
         bmode = layout.get("bucket_hash", "portable")
-        base_cols = target.read(table).columns
+        base = target.read(table, with_meta=True)
+        base_cols = [c for c in base.columns if not c.startswith("__sslr")]
         log = dedup_latest_version(
             target.read(log_t, with_meta=True).select(
                 *base_cols, TOMBSTONE_COL
@@ -1017,40 +1037,19 @@ def compact_upsert_log(
         log_b = with_bucket(log, pk_cols, stored_buckets, bmode).persist()
         try:
             affected = bucket_ids(log_b)
-            if not affected:
-                target.drop(log_t)
-                return {"folded_rows": folded}
-            base = target.read(table, with_meta=True).filter(
+            keep = base.filter(
                 F.col(BUCKET_COL).isin(affected)  # partition pruning
-            )
-            keep = base.join(
-                log_b.select(*pk_cols), pk_cols, "left_anti"
-            )
+            ).join(log_b.select(*pk_cols), pk_cols, "left_anti")
             survivors = log_b.filter(~F.col(TOMBSTONE_COL)).drop(
                 TOMBSTONE_COL
             )
-            # persist: the emptied-bucket probe below must run BEFORE
-            # the rewrite (it reads the files the rewrite replaces),
-            # and the cache hands the already-computed fold to the
-            # write instead of a second pruned scan
-            out = keep.unionByName(
-                survivors.select(*keep.columns)
-            ).persist()
-            try:
-                # buckets left EMPTY by tombstones: dynamic overwrite
-                # cannot express an empty partition — find them first
-                left = {
-                    int(r[0])
-                    for r in out.select(BUCKET_COL).distinct().collect()
-                }
-                target.replace_partitions(
-                    table, out, BUCKET_COL, sort_cols=pk_cols
-                )
-                emptied = [b for b in affected if b not in left]
-                if emptied and hasattr(target, "drop_partitions"):
-                    target.drop_partitions(table, BUCKET_COL, emptied)
-            finally:
-                out.unpersist()
+            target.replace_partitions(
+                table,
+                keep.unionByName(survivors.select(*keep.columns)),
+                BUCKET_COL,
+                affected,
+                sort_cols=pk_cols,
+            )
         finally:
             log_b.unpersist()
     elif n_buckets:

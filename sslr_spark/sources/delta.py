@@ -12,20 +12,20 @@ transactional equivalents:
 - read-merge-overwrite upsert      -> ``MERGE INTO`` keyed on the PK
   (cost ∝ touched files via data skipping, the reference's J2
   transaction, internal/updates.go:171-222)
-- dynamic partition overwrite      -> ``replaceWhere`` on the bucket
-  partition column (atomic, unlike the parquet path's
-  partition-by-partition swap)
+- partition replacement            -> ``replaceWhere`` on the bucket
+  partition column (atomic across partitions, unlike the parquet
+  path's partition-by-partition swap)
 - delete-by-keyset                 -> ``MERGE ... WHEN MATCHED THEN
   DELETE`` (reference internal/deletes.go:166-235)
 
 Two incremental modes, chosen by config exactly like parquet targets:
 with ``targetBuckets`` set (the default), the Job maintains the
 bucket-partitioned layout and incremental slices go through the
-partition-pruned merge (`replaceWhere` repairs, atomic here unlike
-the parquet dynamic overwrite); with ``"targetBuckets": 0`` the
-adapter's ``apply_upsert``/``delete_keys`` MERGEs apply in place with
-no synthetic partitioning — Delta's data skipping prunes on the PK
-ranges instead. In both modes the version column is stripped exactly
+partition-pruned merge (`replaceWhere` repairs, atomic across
+partitions here unlike the parquet per-partition swap); with
+``"targetBuckets": 0`` the adapter's ``apply_upsert``/``delete_keys``
+MERGEs apply in place with no synthetic partitioning — Delta's data
+skipping prunes on the PK ranges instead. In both modes the version column is stripped exactly
 like a JDBC target (the adapter is in-place-capable).
 
 Scale: MERGE shuffles only the update slice against the matched files
@@ -171,15 +171,13 @@ class DeltaDatabase:
                 )
 
     def replace_partitions(
-        self, table: str, df: DataFrame, partition_col: str,
+        self, table: str, df: DataFrame, partition_col: str, values: list,
         sort_cols: list[str] | None = None,
     ) -> None:
-        """Atomic bounded-partition replacement: Delta's native
-        ``replaceWhere`` — the operation the parquet adapter's dynamic
-        overwrite approximates non-atomically."""
-        values = [
-            r[0] for r in df.select(partition_col).distinct().collect()
-        ]  # bounded: callers pass the mismatched-bucket slice
+        """Atomic replacement of the listed partitions: Delta's native
+        ``replaceWhere`` over ``values`` — a listed partition without
+        rows in ``df`` ends empty, unlisted ones are not touched (the
+        parquet adapter's contract, committed in one transaction)."""
         if not values:
             return
         if sort_cols:

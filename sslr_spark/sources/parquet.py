@@ -2,7 +2,8 @@
 
 A "database" is a directory holding one parquet dataset per table at
 ``<root>/<table>.parquet``. Writes are atomic: stage to a temp
-directory, then swap via rename — this is the parquet-world analog of
+directory, then swap via rename (the whole table directory, or each
+rewritten partition directory) — this is the parquet-world analog of
 the reference's transactional apply (BEGIN ... COPY ... COMMIT,
 reference internal/updates.go:172-221). A reader either sees the old
 table or the new one, never a partial write, and a crash mid-write
@@ -15,6 +16,7 @@ rename is the dependency-free local equivalent.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
@@ -60,23 +62,74 @@ class ParquetDatabase:
         return df
 
     # -- write ---------------------------------------------------------
-    def overwrite(self, table: str, df: DataFrame) -> None:
-        """Atomically replace ``table`` with ``df`` (stage + swap)."""
+    def _commit(
+        self,
+        table: str,
+        write,
+        parts: list[str] | None = None,
+        layout: dict | None = None,
+    ) -> None:
+        """The adapter's one commit protocol: ``write(stage)`` writes
+        the new data to a fresh stage directory, then renames swap it
+        in — the whole table directory (``parts`` None), or each listed
+        partition directory of the table (a listed partition the stage
+        does not hold is removed; unlisted ones are not touched). Each
+        swap parks the old directory, renames the new one in and rolls
+        the old one back if that rename fails, so a reader sees the old
+        or the new unit, never a partial write. ``layout`` is written
+        into the stage as the ``_sslr_layout.json`` marker, so a whole-
+        table swap commits it with the data."""
         final = self.path(table)
         stage = os.path.join(self.root, f".stage-{table}-{uuid.uuid4().hex}")
-        old = os.path.join(self.root, f".old-{table}-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(stage)
         try:
-            if os.path.exists(final):
-                os.rename(final, old)
-            os.rename(stage, final)
-        except BaseException:
-            # roll back: restore the previous committed table
-            if not os.path.exists(final) and os.path.exists(old):
-                os.rename(old, final)
+            write(stage)
+            if layout:
+                with open(os.path.join(stage, "_sslr_layout.json"), "w") as fh:
+                    json.dump(layout, fh)
+            if parts is None:
+                moves = [(stage, final)]
+            else:
+                stray = {d for d in os.listdir(stage) if "=" in d} - set(parts)
+                if stray:
+                    raise ValueError(
+                        f"rows outside the listed partitions of {table!r}: "
+                        f"{sorted(stray)}"
+                    )
+                os.makedirs(final, exist_ok=True)
+                moves = [
+                    (os.path.join(stage, p), os.path.join(final, p))
+                    for p in parts
+                ]
+            for src, dst in moves:
+                old = os.path.join(
+                    self.root, f".old-{table}-{uuid.uuid4().hex}"
+                )
+                try:
+                    if os.path.exists(dst):
+                        os.rename(dst, old)
+                    if os.path.exists(src):
+                        os.rename(src, dst)
+                except BaseException:
+                    if not os.path.exists(dst) and os.path.exists(old):
+                        os.rename(old, dst)
+                    raise
+                shutil.rmtree(old, ignore_errors=True)
+        finally:
             shutil.rmtree(stage, ignore_errors=True)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+
+    @staticmethod
+    def _layout(partition_col, n_buckets, bucket_hash) -> dict | None:
+        if not n_buckets:
+            return None
+        return {
+            "partition_col": partition_col,
+            "n_buckets": int(n_buckets),
+            "bucket_hash": bucket_hash or "portable",
+        }
+
+    def overwrite(self, table: str, df: DataFrame) -> None:
+        """Atomically replace ``table`` with ``df`` (stage + swap)."""
+        self._commit(table, lambda stage: df.write.parquet(stage))
 
     def overwrite_partitioned(
         self,
@@ -100,35 +153,14 @@ class ParquetDatabase:
         salts the write clustering to raise write parallelism when the
         bucket count is below the cluster's task slots (at the cost of
         that many files per bucket)."""
-        final = self.path(table)
-        stage = os.path.join(self.root, f".stage-{table}-{uuid.uuid4().hex}")
-        old = os.path.join(self.root, f".old-{table}-{uuid.uuid4().hex}")
         df = self._cluster_by_partition(
             df, partition_col, files_per_bucket, n_buckets, sort_cols
         )
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
-        if n_buckets:
-            import json
-
-            with open(os.path.join(stage, "_sslr_layout.json"), "w") as fh:
-                json.dump(
-                    {
-                        "partition_col": partition_col,
-                        "n_buckets": int(n_buckets),
-                        "bucket_hash": bucket_hash or "portable",
-                    },
-                    fh,
-                )
-        try:
-            if os.path.exists(final):
-                os.rename(final, old)
-            os.rename(stage, final)
-        except BaseException:
-            if not os.path.exists(final) and os.path.exists(old):
-                os.rename(old, final)
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+        self._commit(
+            table,
+            lambda stage: df.write.partitionBy(partition_col).parquet(stage),
+            layout=self._layout(partition_col, n_buckets, bucket_hash),
+        )
 
     def overwrite_partitioned_aligned(
         self,
@@ -149,60 +181,53 @@ class ParquetDatabase:
         frame would produce). The small ``extra_df`` (the update
         slice) appends clustered. Two passes into one stage dir, one
         atomic swap."""
-        final = self.path(table)
-        stage = os.path.join(self.root, f".stage-{table}-{uuid.uuid4().hex}")
-        old = os.path.join(self.root, f".old-{table}-{uuid.uuid4().hex}")
-        aligned_df.write.partitionBy(partition_col).parquet(stage)
-        (
-            extra_df.repartition(
-                max(8, (n_buckets or 64) // 8), F.col(partition_col)
-            )
-            .write.mode("append")
-            .partitionBy(partition_col)
-            .parquet(stage)
-        )
-        if n_buckets:
-            import json
 
-            with open(os.path.join(stage, "_sslr_layout.json"), "w") as fh:
-                json.dump(
-                    {
-                        "partition_col": partition_col,
-                        "n_buckets": int(n_buckets),
-                        "bucket_hash": bucket_hash or "portable",
-                    },
-                    fh,
+        def write(stage: str) -> None:
+            aligned_df.write.partitionBy(partition_col).parquet(stage)
+            (
+                extra_df.repartition(
+                    max(8, (n_buckets or 64) // 8), F.col(partition_col)
                 )
-        try:
-            if os.path.exists(final):
-                os.rename(final, old)
-            os.rename(stage, final)
-        except BaseException:
-            if not os.path.exists(final) and os.path.exists(old):
-                os.rename(old, final)
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+                .write.mode("append")
+                .partitionBy(partition_col)
+                .parquet(stage)
+            )
+
+        self._commit(
+            table, write,
+            layout=self._layout(partition_col, n_buckets, bucket_hash),
+        )
 
     def replace_partitions(
-        self, table: str, df: DataFrame, partition_col: str,
+        self,
+        table: str,
+        df: DataFrame,
+        partition_col: str,
+        values: list,
         sort_cols: list[str] | None = None,
     ) -> None:
-        """Dynamic partition overwrite: only the partitions present in
-        ``df`` are replaced; all others are untouched. This is the
-        plain-parquet equivalent of Delta's ``replaceWhere`` — the
-        scale path for repairs that touch a small fraction of a huge
-        table (cost ∝ changed partitions, not table size).
+        """Replace the listed partitions of ``table``: each partition
+        ``partition_col=v`` for ``v`` in ``values`` ends up holding
+        exactly ``df``'s rows for it, and a listed partition without
+        rows is removed; unlisted partitions are not touched. ``df``
+        must hold rows of listed partitions only. The plain-parquet
+        equivalent of Delta's ``replaceWhere`` — the scale path for
+        merges and repairs that touch a small fraction of a huge table
+        (cost ∝ listed partitions, not table size).
 
-        Not atomic across partitions (a crash can leave a partition
-        mix); safe here because every caller re-applies idempotently
-        until the watermark/state commit succeeds."""
-        (
-            self._cluster_by_partition(df, partition_col, sort_cols=sort_cols)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(self.path(table))
+        ``df`` is staged first (so it may read the partitions it
+        replaces), then each partition directory is swapped in by
+        rename with :meth:`overwrite`'s rollback; a missing table
+        directory is created. Atomic per partition, not across them:
+        every caller re-applies idempotently until its watermark or
+        manifest commit lands. A hard kill between the two renames of
+        one partition parks its old files in a ``.old-`` directory of
+        the database root."""
+        df = self._cluster_by_partition(df, partition_col, sort_cols=sort_cols)
+        self._commit(
+            table,
+            lambda stage: df.write.partitionBy(partition_col).parquet(stage),
+            parts=[f"{partition_col}={v}" for v in values],
         )
 
     @staticmethod
@@ -293,8 +318,6 @@ class ParquetDatabase:
         """The ``_sslr_layout.json`` marker written by
         :meth:`overwrite_partitioned` (None for unpartitioned or
         pre-marker layouts)."""
-        import json
-
         p = os.path.join(self.path(table), "_sslr_layout.json")
         if not os.path.exists(p):
             return None
@@ -328,8 +351,6 @@ class ParquetDatabase:
         """Small JSON sidecar in the table directory (e.g. the MOR
         compaction record) — footer-class metadata, zero Spark jobs
         to read back."""
-        import json
-
         if not self.table_exists(table):
             return
         with open(
@@ -338,8 +359,6 @@ class ParquetDatabase:
             json.dump(meta, fh)
 
     def read_table_meta(self, table: str, name: str) -> dict | None:
-        import json
-
         p = os.path.join(self.path(table), f"_sslr_{name}.json")
         if not os.path.exists(p):
             return None
@@ -349,8 +368,10 @@ class ParquetDatabase:
     def drop_partitions(
         self, table: str, partition_col: str, values: list
     ) -> None:
-        """Remove whole partitions (used when a repair leaves a bucket
-        empty — dynamic overwrite cannot express an empty partition)."""
+        """Remove whole partitions (the streaming epoch GC). A
+        partition rewrite needs no follow-up removal:
+        :meth:`replace_partitions` removes a listed partition that
+        ends without rows."""
         for v in values:
             shutil.rmtree(
                 os.path.join(self.path(table), f"{partition_col}={v}"),
@@ -397,20 +418,9 @@ class ParquetDatabase:
         ∝ oversize partitions only, never the table; untouched buckets
         keep their files byte-identical.
 
-        Crash safety differs from :meth:`replace_partitions` on
-        purpose: the repair path's dynamic overwrite is safe because
-        its callers re-derive the rewrite from the SOURCE, but here
-        the target itself is the only copy of the rows — a dynamic
-        overwrite's delete-then-commit window would lose a bucket
-        permanently on a crash. So compaction stages the rewritten
-        partitions to a side directory first, then swaps each bucket
-        dir with the same rename+rollback protocol as
-        :meth:`overwrite`. Worst crash case (between the two renames
-        of one bucket — no Spark job runs in that window): that
-        bucket's files are parked in a ``.old-`` dir instead of lost;
-        rolled back automatically on an in-process failure, rename
-        back by hand after a hard kill. Re-running compaction
-        converges.
+        The rewrite is one :meth:`replace_partitions` over the
+        oversize partitions, so each bucket swaps in by rename with
+        rollback; re-running compaction converges.
 
         Returns {"compacted": n, "skipped": n, "values": [...]}."""
         meta = self.layout_meta(table)
@@ -428,32 +438,13 @@ class ParquetDatabase:
         vals = [int(v) for v in over] if dict(
             (f.name, f.dataType.simpleString()) for f in df.schema.fields
         ).get(pcol, "string") in ("int", "bigint", "long") else over
-        oversize = df.filter(F.col(pcol).isin(vals))  # partition pruning
-        stage = os.path.join(self.root, f".compact-{table}-{uuid.uuid4().hex}")
-        (
-            self._cluster_by_partition(oversize, pcol, sort_cols=sort_cols)
-            .write.mode("overwrite")
-            .partitionBy(pcol)
-            .parquet(stage)
+        self.replace_partitions(
+            table,
+            df.filter(F.col(pcol).isin(vals)),  # partition pruning
+            pcol,
+            vals,
+            sort_cols=sort_cols,
         )
-        final = self.path(table)
-        try:
-            for v in over:
-                part = f"{pcol}={v}"
-                staged = os.path.join(stage, part)
-                dst = os.path.join(final, part)
-                old = os.path.join(self.root, f".old-{part}-{uuid.uuid4().hex}")
-                if not os.path.exists(staged):
-                    continue  # bucket vanished between list and read
-                os.rename(dst, old)
-                try:
-                    os.rename(staged, dst)
-                except BaseException:
-                    os.rename(old, dst)  # roll the bucket back
-                    raise
-                shutil.rmtree(old, ignore_errors=True)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
         return {
             "compacted": len(over),
             "skipped": len(counts) - len(over),

@@ -113,10 +113,11 @@ def stream_incremental_sync(
     - trigger: processingTime mirrors the reference's poll interval;
       None => availableNow semantics are up to the caller's stop.
     - ``n_buckets`` (default on): maintain the target
-      bucket-partitioned and merge each micro-batch via pruned
-      dynamic-partition overwrite — per-trigger cost ∝ touched
-      buckets, not table size. ``None`` falls back to whole-table
-      read-merge-overwrite (small targets only).
+      bucket-partitioned and merge each micro-batch by rewriting only
+      the touched bucket partitions (``replace_partitions``) —
+      per-trigger cost ∝ touched buckets, not table size. ``None``
+      falls back to whole-table read-merge-overwrite (small targets
+      only).
 
     Returns the StreamingQuery.
     """
@@ -276,7 +277,9 @@ def stream_mor_sync(
             base_cols = target.read(table).columns
             if flags is None:
                 append_upsert_log(
-                    target, table, payload_df, pk_cols, version_col
+                    target, table,
+                    dedup_latest_version(payload_df, pk_cols, version_col),
+                    pk_cols, version_col,
                 )
                 log_batch = None
             else:
@@ -452,12 +455,13 @@ def streaming_neardup_ingest(
 
     Exactly-once for CHECKPOINTED replays (the crash-recovery path,
     where a replayed epoch carries the same id and file set): all
-    three writes go through per-epoch dynamic partition overwrite
-    (``replace_partitions`` on an ``__epoch`` column), and the index
-    load EXCLUDES the current epoch's partition — so a replayed batch
-    recomputes against exactly the pre-crash corpus state and
-    overwrites its own partitions with identical rows instead of
-    appending duplicates or (worse) self-matching into data loss.
+    three writes replace the epoch's own partition
+    (``replace_partitions`` of ``[epoch]`` on an ``__epoch`` column),
+    and the index load EXCLUDES the current epoch's partition — so a
+    replayed batch recomputes against exactly the pre-crash corpus
+    state and overwrites its own partitions with identical rows
+    instead of appending duplicates or (worse) self-matching into
+    data loss.
 
     A FRESH checkpoint over an already-populated target is a rebuild,
     not a replay: epoch numbering restarts at 0 while the target still
@@ -599,15 +603,15 @@ def streaming_neardup_ingest(
                 new_sh, new_bk, _ = minhash_index(
                     fresh, text_col, shingle_n, n_hashes, n_bands, hash_mode
                 )
-                target.replace_partitions(
-                    accepted_table, fresh.withColumn("__epoch", ep), "__epoch"
-                )
-                target.replace_partitions(
-                    sh_table, new_sh.withColumn("__epoch", ep), "__epoch"
-                )
-                target.replace_partitions(
-                    bk_table, new_bk.withColumn("__epoch", ep), "__epoch"
-                )
+                for t, part in (
+                    (accepted_table, fresh),
+                    (sh_table, new_sh),
+                    (bk_table, new_bk),
+                ):
+                    target.replace_partitions(
+                        t, part.withColumn("__epoch", ep), "__epoch",
+                        [int(epoch_id)],
+                    )
             if (
                 compact_every
                 and int(epoch_id) > 0
@@ -813,7 +817,7 @@ def compact_neardup_index(
             .withColumn("__epoch", F.lit(seg_id))
             .distinct()
         )
-        target.replace_partitions(t, base, "__epoch")
+        target.replace_partitions(t, base, "__epoch", [seg_id])
     rows = (
         target.read(bk_table).filter(F.col("__epoch") == seg_id).count()
     )
@@ -920,7 +924,7 @@ def compact_neardup_index_incremental(
                 .withColumn("__epoch", F.lit(seg_id))
                 .distinct()
             )
-            target.replace_partitions(t, part, "__epoch")
+            target.replace_partitions(t, part, "__epoch", [seg_id])
         return (
             target.read(bk_table)
             .filter(F.col("__epoch") == seg_id)

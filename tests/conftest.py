@@ -78,3 +78,16 @@ def assert_df_equal(a, b, keys):
     ra = sorted(a.select(*cols).collect(), key=lambda r: tuple(str(r[k]) for k in keys))
     rb = sorted(b.select(*cols).collect(), key=lambda r: tuple(str(r[k]) for k in keys))
     assert ra == rb
+
+
+def jobs_in(spark, group: str, fn):
+    """Run ``fn`` under a fresh Spark job group; returns its result and
+    the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

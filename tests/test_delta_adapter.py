@@ -121,7 +121,7 @@ def test_delta_replace_partitions_live(delta_db):
     }
 
     repl = spark.createDataFrame([(1000, 2)], "id long, b long")
-    db.replace_partitions("t", repl, "b")
+    db.replace_partitions("t", repl, "b", [2])
     got = db.read("t", with_meta=True)
     assert got.filter("b = 2").count() == 1  # partition replaced
     assert got.filter("b != 2").count() == 75  # others untouched
@@ -249,3 +249,34 @@ def test_stub_drop_partitions_predicate(stub_delta):
     # empty partition list never touches the table
     db.drop_partitions("t", "__sslr_bucket", [])
     assert len(created) == 1
+
+
+def test_stub_replace_partitions_over_given_values(stub_delta, spark, monkeypatch):
+    """``replaceWhere`` covers exactly the listed values — including one
+    the frame holds no rows for, which Delta then empties — and the
+    frame's partition values are never collected; an empty list writes
+    nothing."""
+    db, log, created = stub_delta
+    calls: list[tuple] = []
+
+    class _Writer:
+        def __getattr__(self, name):
+            def record(*a):
+                calls.append((name, *a))
+                return self
+
+            return record
+
+    df = spark.createDataFrame([(1000, 2)], "id long, b long")
+    monkeypatch.setattr(type(df), "write", property(lambda self: _Writer()))
+
+    def no_collect(self):
+        raise AssertionError("partition values collected")
+
+    monkeypatch.setattr(type(df), "collect", no_collect)
+    db.replace_partitions("t", df, "b", [2, 5])
+    assert ("option", "replaceWhere", "`b` in (2, 5)") in calls
+    assert calls[-1] == ("save", db.path("t"))
+    calls.clear()
+    db.replace_partitions("t", df, "b", [])
+    assert calls == [] and created == []

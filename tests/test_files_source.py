@@ -113,11 +113,11 @@ def test_versionless_source_full_copies_every_pass(spark, tmp_path, jsonl_root):
     src = FilesDatabase(spark, jsonl_root, fmt="jsonl")
     target = ParquetDatabase(spark, str(tmp_path / "tgt"))
     store = StateStore(target)
-    n = sync_updates(
+    done = sync_updates(
         src.read("docs"), target, store, "docs", ["doc_id"],
         version_col="xmin", n_buckets=None,
     )
-    assert n == 4
+    assert done.rows == 4
     assert target.read("docs").count() == 4
 
     # replace the drop wholesale: doc 2 gone, doc 9 new
@@ -125,11 +125,11 @@ def test_versionless_source_full_copies_every_pass(spark, tmp_path, jsonl_root):
         fh.write('{"doc_id": 1, "text": "alpha"}\n'
                  '{"doc_id": 3, "text": "gamma"}\n'
                  '{"doc_id": 9, "text": "new"}\n')
-    n = sync_updates(
+    done = sync_updates(
         src.read("docs"), target, store, "docs", ["doc_id"],
         version_col="xmin", n_buckets=None,
     )
-    assert n == 3  # full copy again, not an incremental no-op
+    assert done.rows == 3 and done.full_copy  # full copy again, not an incremental no-op
     assert {r.doc_id for r in target.read("docs").collect()} == {1, 3, 9}
 
 

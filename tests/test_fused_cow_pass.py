@@ -23,7 +23,7 @@ from sslr_spark.job import Job
 from sslr_spark.operators.deletes import BUCKET_COL, effective_buckets, with_bucket
 from sslr_spark.sources.parquet import ParquetDatabase
 from sslr_spark.throttle import Throttle
-from tests.conftest import make_timestamps
+from tests.conftest import jobs_in, make_timestamps
 
 N_ROWS = 400
 N_BUCKETS = 16
@@ -210,23 +210,12 @@ def test_duplicated_target_key_inside_slice_flags_no_fewer(spark, tmp_path):
 # -- cost guards -------------------------------------------------------
 
 
-def _jobs_in(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_effective_buckets_reads_marker_without_jobs(spark, target_db):
     df = spark.range(200).withColumnRenamed("id", "k")
     target_db.overwrite_partitioned(
         "t", with_bucket(df, ["k"], 64), BUCKET_COL, n_buckets=64
     )
-    n, jobs = _jobs_in(
+    n, jobs = jobs_in(
         spark, "effective-buckets", lambda: effective_buckets(target_db, "t", 64)
     )
     assert n == 64
@@ -277,7 +266,7 @@ def test_incremental_cow_pass_job_count_and_one_write(spark, tmp_path, monkeypat
 
         monkeypatch.setattr(ParquetDatabase, name, wrapped)
     job = Job(spark, _two_table_config(tmp_path))
-    res, jobs = _jobs_in(spark, "cow-pass", job.run)
+    res, jobs = jobs_in(spark, "cow-pass", job.run)
 
     assert res.updated_rows == len(updated) + 20
     assert res.repaired_buckets > 0

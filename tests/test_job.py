@@ -380,6 +380,35 @@ def test_compaction_knob_runs_after_sync(spark, tmp_path):
     assert_df_equal(job.target.read("timestamps"), src, ["id"])
 
 
+@pytest.mark.parametrize("mor", [False, True], ids=["cow", "mor"])
+def test_stale_target_full_copy_is_reported_and_skips_delete_phase(
+    spark, tmp_path, monkeypatch, mor
+):
+    """A full copy taken for a reason other than force — here a stale
+    target that lost most of its buckets — is listed in
+    ``full_copies``, and no delete diff runs over the table it just
+    copied."""
+    import sslr_spark.operators.deletes as deletes
+    from sslr_spark.operators.deletes import BUCKET_COL
+
+    job = make_job(spark, tmp_path, target_buckets=8, merge_on_read=mor)
+    src = make_timestamps(spark, 400)
+    job.source.overwrite("timestamps", src)
+    assert job.run().full_copies == ["timestamps"]
+    job.target.drop_partitions("timestamps", BUCKET_COL, list(range(1, 8)))
+
+    def no_diff(*a, **k):
+        raise AssertionError("delete diff over a table just copied")
+
+    monkeypatch.setattr(deletes, "sync_deletes_partitioned", no_diff)
+    monkeypatch.setattr(Job, "_sync_deletes_mor", no_diff)
+    job2 = make_job(spark, tmp_path, target_buckets=8, merge_on_read=mor)
+    res = job2.run()
+    assert res.full_copies == ["timestamps"]
+    assert res.updated_rows == 400
+    assert_df_equal(job2.target.read("timestamps"), src, ["id"])
+
+
 def test_compaction_off_by_default(spark, tmp_path):
     cfg = load_config(
         '{"source": "/s", "target": "/t", "sourceTables": ["a"],'

@@ -208,6 +208,7 @@ def test_snapshot_survives_overwrite_and_partition_rewrite(spark, tmp_path):
             spark.range(100).withColumn("v", F.lit(0)), ["id"], 8
         ).filter(F.col(BUCKET_COL) == 3),
         BUCKET_COL,
+        [3],
     )
     snap_p = db.read_snapshot("p", "run1")
     # pre-rewrite bytes: every snapshot row still has v == id * 2
@@ -216,3 +217,122 @@ def test_snapshot_survives_overwrite_and_partition_rewrite(spark, tmp_path):
 
     db.drop_snapshot("t", "run1")
     assert db.list_snapshots("t") == []
+
+
+def _bucketed_table(spark, db, n_buckets=8):
+    from sslr_spark.operators.deletes import BUCKET_COL, with_bucket
+
+    df = with_bucket(
+        spark.range(0, 200).selectExpr("id", "id * 2 as v"), ["id"], n_buckets
+    )
+    db.overwrite_partitioned("t", df, BUCKET_COL, n_buckets=n_buckets)
+    return df
+
+
+def _part_files(db, table, value):
+    """File name -> inode of one bucket partition directory."""
+    import os
+
+    from sslr_spark.operators.deletes import BUCKET_COL
+
+    d = os.path.join(db.path(table), f"{BUCKET_COL}={value}")
+    return {f: os.stat(os.path.join(d, f)).st_ino for f in os.listdir(d)}
+
+
+def _leftovers(db):
+    import os
+
+    return [d for d in os.listdir(db.root) if d.startswith((".stage-", ".old-"))]
+
+
+def test_replace_partitions_swaps_listed_partitions_only(spark, target_db):
+    """A listed partition takes exactly the frame's rows, a listed one
+    without rows is removed, unlisted ones keep their files (same
+    inodes) and the layout marker stays."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from sslr_spark.operators.deletes import BUCKET_COL
+
+    df = _bucketed_table(spark, target_db)
+    kept = {b: _part_files(target_db, "t", b) for b in range(8) if b not in (2, 5)}
+    target_db.replace_partitions(
+        "t",
+        df.filter(F.col(BUCKET_COL) == 2).withColumn("v", F.lit(-1).cast("long")),
+        BUCKET_COL,
+        [2, 5],
+    )
+    got = target_db.read("t", with_meta=True)
+    assert not os.path.exists(os.path.join(target_db.path("t"), f"{BUCKET_COL}=5"))
+    assert got.filter(F.col(BUCKET_COL) == 5).count() == 0
+    assert {r.v for r in got.filter(F.col(BUCKET_COL) == 2).collect()} == {-1}
+    rest = ~F.col(BUCKET_COL).isin(2, 5)
+    assert sorted(got.filter(rest).collect()) == sorted(df.filter(rest).collect())
+    assert {b: _part_files(target_db, "t", b) for b in kept} == kept
+    assert target_db.layout_meta("t")["n_buckets"] == 8
+    assert _leftovers(target_db) == []
+
+
+def test_replace_partitions_creates_missing_table(spark, target_db):
+    from sslr_spark.operators.deletes import BUCKET_COL, with_bucket
+
+    df = with_bucket(spark.range(20).selectExpr("id"), ["id"], 4)
+    values = sorted({r[BUCKET_COL] for r in df.collect()})
+    assert not target_db.table_exists("fresh")
+    target_db.replace_partitions("fresh", df, BUCKET_COL, values)
+    assert sorted(r.id for r in target_db.read("fresh").collect()) == list(range(20))
+
+
+def test_replace_partitions_rolls_back_a_failed_swap(spark, target_db, monkeypatch):
+    """The rename that moves a staged partition in fails for bucket 3:
+    bucket 3's old files are back in place, bucket 1 (swapped before
+    it) holds the new rows, and no stage or parked directory is left."""
+    import os
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    import sslr_spark.sources.parquet as parquet
+    from sslr_spark.operators.deletes import BUCKET_COL
+
+    df = _bucketed_table(spark, target_db)
+    before = _part_files(target_db, "t", 3)
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if ".stage-" in src and dst.endswith(f"{BUCKET_COL}=3"):
+            raise OSError("rename failed")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(parquet.os, "rename", rename)
+    with pytest.raises(OSError, match="rename failed"):
+        target_db.replace_partitions(
+            "t",
+            df.filter(F.col(BUCKET_COL).isin(1, 3)).withColumn("v", F.lit(-1).cast("long")),
+            BUCKET_COL,
+            [1, 3],
+        )
+    monkeypatch.undo()
+    assert _part_files(target_db, "t", 3) == before
+    got = target_db.read("t", with_meta=True)
+    assert {r.v for r in got.filter(F.col(BUCKET_COL) == 1).collect()} == {-1}
+    b3 = F.col(BUCKET_COL) == 3
+    assert sorted(got.filter(b3).collect()) == sorted(df.filter(b3).collect())
+    assert _leftovers(target_db) == []
+
+
+def test_replace_partitions_rejects_rows_outside_the_list(spark, target_db):
+    import pytest
+    from pyspark.sql import functions as F
+
+    from sslr_spark.operators.deletes import BUCKET_COL
+
+    df = _bucketed_table(spark, target_db)
+    before = {b: _part_files(target_db, "t", b) for b in range(8)}
+    with pytest.raises(ValueError, match="outside the listed partitions"):
+        target_db.replace_partitions(
+            "t", df.filter(F.col(BUCKET_COL).isin(2, 4)), BUCKET_COL, [2]
+        )
+    assert {b: _part_files(target_db, "t", b) for b in range(8)} == before
+    assert _leftovers(target_db) == []

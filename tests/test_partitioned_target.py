@@ -206,8 +206,7 @@ def test_partitioned_random_workload_property(spark, tmp_path):
 
 def test_partitioned_bucket_emptied_entirely(spark, tmp_path):
     """A bucket whose every source row disappears must end empty in the
-    target too (dynamic overwrite can't express this; the engine drops
-    the partition dir)."""
+    target too (the partition rewrite removes the partition dir)."""
     job = _mk_job(spark, tmp_path, target_buckets=4)
     src = make_timestamps(spark, 400)
     job.source.overwrite("t1", src)

@@ -35,10 +35,10 @@ def test_bucketed_config_against_unpartitioned_target(spark, source_db, target_d
     )
     source_db.overwrite("t", upd)
     with pytest.warns(UserWarning, match="no __sslr_bucket layout"):
-        n = sync_updates(
+        done = sync_updates(
             source_db.read("t"), target_db, store, "t", ["id"], n_buckets=64
         )
-    assert n == 10
+    assert done.rows == 10
     got = {r.id: r.v for r in target_db.read("t").collect()}
     assert got[0] == 1 and got[9] == 91 and got[10] == 100
 

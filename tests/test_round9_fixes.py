@@ -249,8 +249,8 @@ def test_interrupted_mor_full_copy_forces_full_on_next_pass(
     rng = get_update_range(src2, db, "t", state.get("t"))
     assert rng.full_table is True
 
-    rows = _sync(src2, db, state)  # recovery pass: full copy
-    assert rows == 200
+    done = _sync(src2, db, state)  # recovery pass: full copy
+    assert done.rows == 200 and done.full_copy
     assert db.copy_pending("t") is False  # swap cleared the marker
     assert _rows(db.read("t")) == _rows(src2)
 
@@ -431,8 +431,8 @@ def _bucketed_db(spark, tmp_path, n=400, buckets=8):
 
 
 def test_compaction_rewrites_only_affected_buckets(spark, tmp_path):
-    """A log touching keys in a few buckets folds via dynamic
-    partition overwrite: untouched partitions keep their exact files,
+    """A log touching keys in a few buckets folds via a partition
+    replacement: untouched partitions keep their exact files,
     a fully-tombstoned bucket's directory is dropped, the log is
     truncated, and the compacted base equals the pre-compaction
     overlay read."""
@@ -610,6 +610,43 @@ def test_stream_mor_sync_append_overlay_and_compact(spark, tmp_path):
     assert _rows(db.read("t")) == expect
     # epoch sidecar recorded (replay guard)
     assert db.read_table_meta("t", "stream_mor")["epoch"] >= 0
+
+
+def test_stream_mor_sync_collapses_unflagged_batch(spark, tmp_path):
+    """Without a tombstone flag the raw micro-batch is collapsed to one
+    row per key before the log append: two versions of one key land
+    one log row, and the overlay serves the newer one."""
+    from pyspark.sql import types as T
+
+    from sslr_spark.streaming.pipeline import stream_mor_sync
+
+    src = str(tmp_path / "src")
+    db = _db(spark, tmp_path, "stream_mor_plain")
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("payload", T.StringType()),
+            T.StructField("xmin", T.LongType()),
+        ]
+    )
+
+    def drain():
+        stream_mor_sync(
+            spark, src, schema, db, "t", ["id"], str(tmp_path / "ckpt"),
+            max_files_per_trigger=1, max_log_fraction=10.0,
+        ).awaitTermination()
+
+    _base(spark, 10).coalesce(1).write.mode("append").parquet(src)
+    drain()
+    spark.createDataFrame(
+        [(3, "old", 200), (3, "new", 300), (4, "u4", 200)],
+        "id long, payload string, xmin long",
+    ).coalesce(1).write.mode("append").parquet(src)
+    drain()
+    assert db.table_rows(upsert_log_table("t")) == 2
+    expect = {(i, f"v{i}", 100) for i in range(10) if i not in (3, 4)}
+    expect |= {(3, "new", 300), (4, "u4", 200)}
+    assert _rows(read_merged(db, "t", ["id"])) == expect
 
 
 # ------------------------------------------------------------------

@@ -584,7 +584,7 @@ def test_incremental_compaction_dedupes_legacy_crash_dupes(
             .filter(F.col("__epoch").isin([0, 1]))
             .withColumn("__epoch", F.lit(-1))
         )
-        target.replace_partitions(t, legacy, "__epoch")
+        target.replace_partitions(t, legacy, "__epoch", [-1])
     # both copies are live at bootstrap: 4 epochs x 5 + 10 legacy dupes
     assert P.read_accepted(target).count() == 30
 

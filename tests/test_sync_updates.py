@@ -15,10 +15,10 @@ def test_fresh_sync_full_copy(spark, source_db, target_db):
     source_db.overwrite("timestamps", src)
     store = StateStore(target_db)
 
-    rows = sync_updates(
+    done = sync_updates(
         source_db.read("timestamps"), target_db, store, "timestamps", ["id"]
     )
-    assert rows == 500
+    assert done.rows == 500
     assert_df_equal(target_db.read("timestamps"), src, ["id"])
     assert store.get("timestamps").last_seen_version == 50  # max xmin
 
@@ -41,10 +41,10 @@ def test_incremental_upsert(spark, source_db, target_db):
     src2 = src.filter(~F.col("id").isin(list(range(10)))).unionByName(updated)
     source_db.overwrite("timestamps", src2)
 
-    rows = sync_updates(
+    done = sync_updates(
         source_db.read("timestamps"), target_db, store, "timestamps", ["id"]
     )
-    assert rows == 30  # only the changed slice was applied
+    assert done.rows == 30  # only the changed slice was applied
     assert_df_equal(target_db.read("timestamps"), src2, ["id"])
     assert store.get("timestamps").last_seen_version == 201
 
@@ -58,7 +58,7 @@ def test_big_txn_version_batches_never_split_a_version(spark, source_db, target_
     sync_updates(source_db.read("timestamps"), target_db, store, "timestamps", ["id"])
     store.set_version("timestamps", 1)  # pretend we only saw version 1
 
-    rows = sync_updates(
+    done = sync_updates(
         source_db.read("timestamps"),
         target_db,
         store,
@@ -66,7 +66,7 @@ def test_big_txn_version_batches_never_split_a_version(spark, source_db, target_
         ["id"],
         rows_per_batch=100,  # batches of ~100 rows, but version 7 has 300
     )
-    assert rows == 600
+    assert done.rows == 600
     assert_df_equal(target_db.read("timestamps"), src, ["id"])
     assert store.get("timestamps").last_seen_version == 10
 
@@ -79,10 +79,10 @@ def test_stale_target_triggers_full_copy(spark, source_db, target_db):
     target_db.overwrite("timestamps", src.filter(F.col("id") < 100))
     store.set_version("timestamps", 100)
 
-    rows = sync_updates(
+    done = sync_updates(
         source_db.read("timestamps"), target_db, store, "timestamps", ["id"]
     )
-    assert rows == 1000  # full copy path
+    assert done.rows == 1000 and done.full_copy  # full copy path
     assert_df_equal(target_db.read("timestamps"), src, ["id"])
 
 
@@ -124,7 +124,7 @@ def test_filtered_sync(spark, source_db, target_db):
     src = make_timestamps(spark, 400)
     source_db.overwrite("timestamps", src)
     store = StateStore(target_db)
-    rows = sync_updates(
+    done = sync_updates(
         source_db.read("timestamps"),
         target_db,
         store,
@@ -132,7 +132,7 @@ def test_filtered_sync(spark, source_db, target_db):
         ["id"],
         where="id % 2 = 0",
     )
-    assert rows == 200
+    assert done.rows == 200
     assert target_db.read("timestamps").count() == 200
     assert store.get("timestamps").where_clause == "id % 2 = 0"
 
@@ -174,11 +174,11 @@ def test_full_copy_is_throttled(spark, source_db, target_db):
         sleeps = []
         th = Throttle(50, sleep=sleeps.append)
         store = StateStore(target_db)
-        rows = sync_updates(
+        done = sync_updates(
             source_db.read("timestamps"), target_db, store, "timestamps",
             ["id"], n_buckets=n_buckets, throttle=th,
         )
-        assert rows == 200
+        assert done.rows == 200
         # the copy dominated wall time -> utilization way over 50% ->
         # an adaptive sleep fired, and source time was accounted
         assert th._source_time > 0

@@ -46,18 +46,20 @@ def _mk_epoch(spark, target, e, n_rows, id_stride: int = 100_000):
         f"id + {e * id_stride} as doc_id"
     ).withColumn("__epoch", F.lit(e))
     target.replace_partitions(
-        "accepted", base.withColumn("text", F.lit(f"t{e}")), "__epoch"
+        "accepted", base.withColumn("text", F.lit(f"t{e}")), "__epoch", [e]
     )
     target.replace_partitions(
         "__neardup_index_shingles",
         base.withColumn("shingle", F.concat(F.lit("s"), F.col("doc_id"))),
         "__epoch",
+        [e],
     )
     target.replace_partitions(
         "__neardup_index_buckets",
         base.withColumn("band", (F.col("doc_id") % 4).cast("int"))
         .withColumn("bucket", F.col("doc_id")),
         "__epoch",
+        [e],
     )
 
 
